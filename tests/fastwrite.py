@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -26,11 +27,19 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType, _parse_datatype_string
 
 
-def write_rows(path, rows, schema) -> None:
+def write_rows(path, rows, schema, mode: str = "overwrite") -> None:
     """Write ``rows`` (tuples/lists in schema field order) as ONE
     parquet file under directory ``path`` — a drop-in replacement for
     ``spark.createDataFrame(rows, schema).coalesce(1).write
-    .mode("overwrite").parquet(path)``."""
+    .mode(mode).parquet(path)``.
+
+    ``"overwrite"`` replaces the directory's contents. ``"append"``
+    adds a uniquely named part file and deletes nothing, so files a
+    running file-source stream has already read stay in place; the
+    file is written under a hidden name and renamed into place, so a
+    stream never lists it half-written."""
+    if mode not in ("overwrite", "append"):
+        raise ValueError(f"unsupported write mode: {mode!r}")
     st = (
         _parse_datatype_string(schema)
         if isinstance(schema, str)
@@ -45,11 +54,16 @@ def write_rows(path, rows, schema) -> None:
         pa.array([r[i] for r in rows], type=f.type)
         for i, f in enumerate(pa_schema)
     ]
+    table = pa.Table.from_arrays(arrays, schema=pa_schema)
     path = str(path)
-    if os.path.isdir(path):
-        shutil.rmtree(path)
+    if mode == "overwrite":
+        if os.path.isdir(path):
+            shutil.rmtree(path)
+        os.makedirs(path)
+        pq.write_table(table, os.path.join(path, "part-00000.parquet"))
+        return
     os.makedirs(path, exist_ok=True)
-    pq.write_table(
-        pa.Table.from_arrays(arrays, schema=pa_schema),
-        os.path.join(path, "part-00000.parquet"),
-    )
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(path, f".{name}.tmp")
+    pq.write_table(table, tmp)
+    os.rename(tmp, os.path.join(path, name))

@@ -368,8 +368,72 @@ class TestReviewR10Fixes:
             resp = conn.getresponse()
             assert resp.status == 200
             resp.read()
+            # request 5: a failing statement's 500 keeps the two-element
+            # error list and leaves the socket usable
+            oh = execute(gw, h, "SELECT * FROM gw_keepalive_no_such_table")
+            deadline = time.time() + 30
+            while True:
+                conn.request("GET", f"/sessions/{h}/operations/{oh}/result/0")
+                resp = conn.getresponse()
+                out = json.loads(resp.read())
+                if resp.status != 200 or out["resultType"] != "NOT_READY":
+                    break
+                assert time.time() < deadline
+                time.sleep(0.05)
+            assert resp.status == 500
+            assert len(out["errors"]) == 2
+            assert "Exception on server side" in out["errors"][1]
+            conn.request("GET", "/info")
+            resp = conn.getresponse()
+            assert resp.status == 200
+            resp.read()
         finally:
             conn.close()
+
+    def test_keepalive_replies_are_not_delayed(self, gw, h):
+        """Replies on a reused connection arrive without a per-request
+        stall. The handler writes headers and body in separate sends;
+        with Nagle's algorithm on, the client's delayed ACK held the
+        body back ~44 ms per request, small reply or multi-segment
+        page alike."""
+        import http.client
+        import statistics
+
+        host, port = gw.httpd.server_address[:2]
+        conn = http.client.HTTPConnection(host, port, timeout=30)
+
+        def get(path):
+            t0 = time.perf_counter()
+            conn.request("GET", path)
+            resp = conn.getresponse()
+            body = resp.read()
+            assert resp.status == 200
+            # the reply arrives whole: exactly its declared length
+            assert len(body) == int(resp.getheader("Content-Length"))
+            return time.perf_counter() - t0, json.loads(body)
+
+        def first_page(sql):
+            path = f"/sessions/{h}/operations/{execute(gw, h, sql)}/result/0"
+            deadline = time.time() + 60
+            while get(path)[1]["resultType"] == "NOT_READY":
+                assert time.time() < deadline
+                time.sleep(0.05)
+            return path
+
+        try:
+            full = get(first_page("SELECT id FROM RANGE(1000)"))[1]
+            assert [r["fields"] for r in full["results"]["data"]] == [
+                [i] for i in range(1000)
+            ]
+            # a ~38 KB page of few rows: timed on the wire, not on
+            # the per-row encoding a 1000-row page spends ~5 ms in
+            wide = first_page("SELECT id, repeat('x', 150) AS pad FROM RANGE(200)")
+            info_s = [get("/info")[0] for _ in range(20)]
+            page_s = [get(wide)[0] for _ in range(20)]
+        finally:
+            conn.close()
+        assert statistics.median(info_s) < 0.010, info_s
+        assert statistics.median(page_s) < 0.010, page_s
 
     def test_session_property_with_quote(self, gw):
         h = open_session(gw, "quoted", properties={"pipeline.name": "bob's job"})
@@ -689,6 +753,8 @@ def test_chunked_body_refused_cleanly(gw):
         conn.send(b"5\r\n{\"a\":\r\n0\r\n\r\n")
         resp = conn.getresponse()
         assert resp.status == 411
+        # the client is told the socket drops, not left to see a reset
+        assert resp.getheader("Connection") == "close"
         out = json.loads(resp.read())
         assert "chunked" in out["errors"][0]
     finally:

@@ -40,13 +40,24 @@ def snippet_session(spark):
     sess.close()
 
 
-def _snippets() -> list[tuple[str, str]]:
+def _snippets() -> list:
+    if not SNIPPETS.is_file():
+        # one failing case, not a collection error or a skip: the
+        # conformance check cannot run without the reference's sheet
+        return [pytest.param(None, None, id="reference-snapshot-absent")]
     data = json.loads(SNIPPETS.read_text())
-    return [(name, _expand(entry["body"])) for name, entry in data.items()]
+    return [
+        pytest.param(name, _expand(entry["body"]), id=name)
+        for name, entry in data.items()
+    ]
 
 
-@pytest.mark.parametrize(("name", "sql"), _snippets(), ids=[n for n, _ in _snippets()])
+@pytest.mark.parametrize(("name", "sql"), _snippets())
 def test_snippet_executes(snippet_session, name, sql):
+    if sql is None:
+        pytest.fail(
+            f"reference snapshot absent: {SNIPPETS} not found", pytrace=False
+        )
     for stmt in (s.strip() for s in sql.split(";") if s.strip()):
         op = snippet_session.execute_statement(stmt)
         if op.job_id:  # continuous INSERT — stop it right away
