@@ -120,21 +120,6 @@ class CatalogRegistry:
         return cat.databases.get(self.current_db or cat.default_database)
 
 
-def _purge_table(session: "EngineSession", name: str) -> None:
-    """Remove a connector table everywhere a drop must reach: the
-    registry, its temp view, and EVERY catalog's browse sets (the same
-    name may be listed under several databases after re-CREATEs) —
-    one definition shared by DROP CATALOG and DROP DATABASE CASCADE,
-    mirroring the engine's DROP TABLE (review r11: two hand-synced
-    copies had already diverged once)."""
-    session.connector_tables.pop(name, None)
-    session.connector_ddl.pop(name, None)
-    session.spark.catalog.dropTempView(name)
-    for cat in session.emulated_catalogs.catalogs.values():
-        for db in cat.databases.values():
-            db.tables.discard(name)
-
-
 # -- statement handlers ------------------------------------------------
 
 
@@ -191,7 +176,7 @@ def handle_catalog_ddl(session: "EngineSession", stmt: str) -> tuple[Cols, Rows]
         # exists (review r11)
         for edb in reg.catalogs[name].databases.values():
             for t in list(edb.tables):
-                _purge_table(session, t)
+                session.drop_connector_table(t)
         del reg.catalogs[name]
         session.metadata.invalidate()
         return _OK
@@ -335,9 +320,9 @@ def handle_catalog_ddl(session: "EngineSession", stmt: str) -> tuple[Cols, Rows]
                     f"cannot drop database '{db}': it is the default "
                     f"database of catalog '{cat.name}'"
                 )
-            for t in list(target.tables):  # snapshot: _purge_table
-                # discards from target.tables itself too
-                _purge_table(session, t)
+            # snapshot: the drop discards from target.tables itself too
+            for t in list(target.tables):
+                session.drop_connector_table(t)
             cat.databases.pop(db, None)
             session.metadata.invalidate()
             return _OK

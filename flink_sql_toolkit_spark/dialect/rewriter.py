@@ -649,7 +649,33 @@ def _rewrite_lateral_unnest(masked: str) -> str:
     return re.sub(r"(?is)\bUNNEST\s*\(", "explode(", masked)
 
 
+# a comparison quantified over a subquery: `x = ANY (SELECT …)`
+_QUANTIFIED_RE = re.compile(
+    r"\s*(<=|>=|<>|!=|=|<|>)\s*\b(ANY|SOME|ALL)\s*"
+    r"(?=\(\s*(?:\(\s*)*(?:SELECT|WITH|VALUES)\b)",
+    re.I | re.S,
+)
+
+
+def _quantified_to_in(m: re.Match) -> str:
+    """Spark SQL has no quantified subquery comparison. `= ANY|SOME`
+    IS `IN` and `<> ALL` IS `NOT IN` by the SQL standard's definition,
+    NULL semantics included; no other operator/quantifier pair has an
+    exact Spark spelling."""
+    op, quant = m.group(1), m.group(2).upper()
+    if op == "=" and quant in ("ANY", "SOME"):
+        return " IN "
+    if op in ("<>", "!=") and quant == "ALL":
+        return " NOT IN "
+    raise NotImplementedError(
+        f"quantified comparison '{op} {quant} (subquery)' is not supported; "
+        "supported forms: = ANY|SOME (subquery) (as IN), <> ALL (subquery) "
+        "(as NOT IN), and LIKE ANY|ALL (pattern list)"
+    )
+
+
 def _rewrite_misc(masked: str) -> str:
+    masked = _QUANTIFIED_RE.sub(_quantified_to_in, masked)
     # FROM dual → no FROM clause (Spark allows table-less SELECT)
     masked = re.sub(r"(?is)\bFROM\s+dual\b", "", masked)
     # FETCH FIRST n ROWS ONLY → LIMIT n (syntax-test.fsql / tmLanguage.json:271)

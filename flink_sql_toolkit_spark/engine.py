@@ -263,13 +263,7 @@ class Operation:
                     raise ValueError(
                         f"'{name}' is a view, not a table — use DROP VIEW"
                     )
-            existed = sess.spark.catalog.dropTempView(name) or was_connector
-            sess.connector_tables.pop(name, None)
-            sess.connector_ddl.pop(name, None)
-            sess.unreadable_tables.pop(name, None)
-            for cat in sess.emulated_catalogs.catalogs.values():
-                for db in cat.databases.values():
-                    db.tables.discard(name)
+            existed = sess.drop_connector_table(name) or was_connector
             sess.metadata.invalidate()
             if not existed and not dm.group(2):
                 try:
@@ -371,15 +365,8 @@ class Operation:
             self._execute_insert(name, query, overwrite=False, query_df=df)
         except Exception:
             # failed insert must not leave a half-created table behind —
-            # the rollback mirrors DROP TABLE (registry, reader view,
-            # emulated browse tree, unreadable marker, metadata cache)
-            sess.connector_tables.pop(name, None)
-            sess.connector_ddl.pop(name, None)
-            sess.unreadable_tables.pop(name, None)
-            sess.spark.catalog.dropTempView(name)
-            for cat in sess.emulated_catalogs.catalogs.values():
-                for db in cat.databases.values():
-                    db.tables.discard(name)
+            # the rollback is DROP TABLE's teardown
+            sess.drop_connector_table(name)
             sess.metadata.invalidate()
             raise
 
@@ -1073,6 +1060,22 @@ class EngineSession:
             # external systems may be unreachable — the table stays
             # registered, reads surface the recorded reason
             self.unreadable_tables[table.name] = str(e)
+
+    def drop_connector_table(self, name: str) -> bool:
+        """Remove a table everywhere a drop must reach: the connector
+        registry and its DDL, the unreadable marker, the reader temp
+        view, and EVERY emulated catalog's browse sets (the same name
+        may be listed under several databases after re-CREATEs). The
+        one teardown behind DROP TABLE, the CTAS rollback, DROP
+        DATABASE … CASCADE and DROP CATALOG; callers invalidate
+        metadata themselves. Returns whether a temp view was dropped."""
+        self.connector_tables.pop(name, None)
+        self.connector_ddl.pop(name, None)
+        self.unreadable_tables.pop(name, None)
+        for cat in self.emulated_catalogs.catalogs.values():
+            for db in cat.databases.values():
+                db.tables.discard(name)
+        return self.spark.catalog.dropTempView(name)
 
     def refresh_connector_views(self) -> None:
         # snapshot: this now also runs on async submit worker threads

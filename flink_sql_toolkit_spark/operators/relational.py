@@ -336,8 +336,9 @@ def q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     # across a 1-row-per-partition second exchange; below it the r13
     # single-level decimal form stays. Fraction 0.03: q6's fixed
     # date/discount/quantity window keeps 3.4% of lineitem (measured
-    # at sf0.1, sf-invariant), so the sum sees ≥ the ~8M-row crossover
-    # from ~270M lineitem rows.
+    # at sf0.1, sf-invariant); 0.03 deliberately rounds that down, so
+    # the form switches no earlier than the sum reaches the ~8M-row
+    # crossover (~270M lineitem rows).
     if _two_level(spark, sf_dir, 0.03):
         revdisc_u4 = _half_up_div(
             _u4(_MONEY10) + " * " + _u4(f"CAST(l_discount AS {RATE_DEC})"), 4

@@ -9,8 +9,25 @@
   (expected N/2^bits of the corpus). Anchors here are deterministic
   corpus vectors so the DuckDB oracle reproduces the bucketing; in
   production they'd be random Gaussian planes broadcast to executors.
+- ``sim_ivf_topk``: IVF — coarse cells from refined anchor centroids,
+  each query scans its ``nprobe`` nearest cells.
 - ``sim_embedding_neardup``: near-duplicate pairs (cosine ≥ 0.99)
   inside LSH buckets — embedding-space dedup without O(n²).
+
+Serve paths. With a small query set all three top-k operators run ONE
+``mapInPandas`` corpus pass, ``_grouped_scan_kernel``: each Arrow
+batch is split into groups by a pluggable ``assign`` (brute force: one
+group; LSH: the sign-bit key; IVF: the nearest cell) and each group is
+scored only against the queries probing it. Past the broadcast limit
+each operator runs its distributed join plan. Both forms end in the
+same ranking tail, ``_rank_top_k``.
+
+Models. Everything the serve paths derive from the corpus on the
+driver (query-slice size verdict, dim, row count, anchors, centroids,
+the collected query matrix, the query-side broadcasts) lives in ONE
+cache, ``_MODELS``, stamped with the corpus fingerprint and evicted —
+broadcasts destroyed — as soon as the fingerprint changes;
+``clear_models()`` empties it.
 
 Determinism: dot products are left-to-right folds over the same float
 values in both engines (Spark ``F.aggregate`` / DuckDB ``list_sum``
@@ -28,12 +45,19 @@ Vectors are unit-normalized (FIXTURES.md) so dot product == cosine.
 
 from __future__ import annotations
 
+import os
+
+from pyspark import Broadcast
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from flink_sql_toolkit_spark.operators.registry import register
-from flink_sql_toolkit_spark.tables import load_fanout_table, load_table
+from flink_sql_toolkit_spark.tables import (
+    invalidate_table,
+    load_fanout_table,
+    load_table,
+)
 
 # Fixture default for the oracle-gated registry entries (→ 16
 # buckets). Index width is a *parameter* everywhere (``n_bits`` on the
@@ -63,9 +87,16 @@ BROADCAST_QUERY_LIMIT = 100_000
 # (N = 2,000) stops paying 32-way per-task dispatch for 62-row
 # batches (a trivial 32-task Arrow stage costs ~1.5 s steady-state
 # on local[32]; sim_ivf measured −28% end-to-end at 4 tasks).
-SIM_FANOUT_ROWS_PER_TASK = int(
-    __import__("os").environ.get("SPARK_GRAFT_SIM_FANOUT_ROWS", "500")
-)
+SIM_FANOUT_ROWS_PER_TASK = 500
+
+# Byte budget for the fused serve paths' driver-held query matrix
+# (r15, ADVICE r14 #3): BROADCAST_QUERY_LIMIT is a ROW cap, but the
+# collected matrix is rows×dim×8 bytes — at dim 64 the 100k-row cap
+# is ~51 MB, at dim 4096 it would be 3.2 GB of driver Python plus the
+# pickled broadcast. The effective row cap is therefore
+# min(row limit, byte budget / row bytes), with the dim probed by one
+# pushed-limit scan and cached per corpus.
+FUSED_QUERY_MAX_BYTES = 256 << 20
 
 
 def _emb_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -80,125 +111,105 @@ def _emb_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
 NEARDUP_BUCKET_CAP = 10_000
 
 
-def _query_side(
-    q: DataFrame,
-    limit: int = BROADCAST_QUERY_LIMIT,
-    probe: DataFrame | None = None,
-) -> DataFrame:
-    """Broadcast ``q`` only when it is known-small.
-
-    The probe is `limit(n+1).count()` — Spark's CollectLimit
-    terminates the scan early, so the check never pays a full corpus
-    pass. Callers whose ``q`` has an expensive derived lineage
-    (bucketing, cluster assignment) pass ``probe`` = the cheap
-    upstream frame whose row count upper-bounds |Q| to within the
-    caller's known fan-out (the probe job is then a pushed-filter
-    parquet scan, not a re-run of the corpus-wide lineage). Above the
-    limit the frame is returned unhinted and Catalyst/AQE picks the
-    shuffle strategy.
-    """
-    counted = probe if probe is not None else q
-    if _probe_is_small(counted, limit):
-        return F.broadcast(q)
-    return q
+# ---- the corpus-scoped model cache -----------------------------------
+# (Spark app id, corpus abspath, kind, params) -> (corpus token, model).
+# Reusing a derived model across builds (bench iterations, paged
+# re-execution, an interactive session) is only sound with exact
+# invalidation: the first lookup that sees a new corpus fingerprint
+# evicts every entry of that corpus, destroys their broadcasts, and
+# drops the shared table-plan cache for the embeddings table once — a
+# cached scan pins its file listing, so the re-derived model must not
+# be computed from a stale scan.
+_MODELS: dict[tuple, tuple] = {}
 
 
-# (plan-fingerprint, limit) -> bool. The probe verdict for a given
-# lineage is stable within a session, so repeated query builds (bench
-# iterations, paged re-execution) skip the extra count job.
-_PROBE_CACHE: dict[tuple[str, int], bool] = {}
-
-# Collected fixture query matrix per corpus key — the ANN serve
-# paths' driver-held model input, the same derived-model shape as
-# _ANCHOR_CACHE / _CENTROID_CACHE (r15, ADVICE r14 #3: the fused
-# paths re-collected |Q| embeddings on EVERY build). Invalidation
-# rides _corpus_key's fingerprint.
-_QUERY_MAT_CACHE: dict[tuple, tuple] = {}
-
-
-def _query_matrix(spark: SparkSession, sf_dir: str):
-    """(qids int64[|Q|], qmat float64[|Q|, dim]) of the fixture query
-    slice (vec_id % QUERY_MOD == 0), collected once per corpus."""
-    key = _corpus_key(sf_dir)
-    if key not in _QUERY_MAT_CACHE:
-        import numpy as np  # noqa: PLC0415
-
-        rows = (
-            load_table(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id") % QUERY_MOD == 0)
-            .select("vec_id", "embedding")
-            .collect()
-        )
-        qids = np.asarray([r[0] for r in rows], dtype=np.int64)
-        qmat = (
-            np.asarray([list(r[1]) for r in rows], dtype=np.float64)
-            if rows
-            else np.zeros((0, 0), dtype=np.float64)
-        )
-        _QUERY_MAT_CACHE[key] = (qids, qmat)
-    return _QUERY_MAT_CACHE[key]
+def _corpus_token(sf_dir: str) -> tuple:
+    """Metadata fingerprint of the embeddings fixture — (relpath,
+    size, mtime_ns) per data file, file-or-directory parquet. Pure
+    os.stat, no Spark job. A write through ANY path (engine DML,
+    external append, fixture regeneration) changes it, so the derived
+    models (k, anchors, centroids, query matrix) re-derive instead of
+    serving a stale one (VERDICT r13 "What's wrong #2")."""
+    path = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
+    if os.path.isdir(path):
+        entries = []
+        for root, _dirs, files in os.walk(path):
+            for f in sorted(files):
+                fp = os.path.join(root, f)
+                st = os.stat(fp)
+                entries.append(
+                    (os.path.relpath(fp, path), st.st_size, st.st_mtime_ns)
+                )
+        return tuple(entries)
+    if not os.path.exists(path):
+        return ()
+    st = os.stat(path)
+    return ((path, st.st_size, st.st_mtime_ns),)
 
 
-# One broadcast per (Spark context, corpus key, kind, params) — ADVICE
-# r14 #2: the fused serve paths created a fresh
-# sparkContext.broadcast on every build and never destroyed it, so a
-# bench loop leaked broadcast blocks in driver and executors for the
-# session lifetime. A slot whose corpus fingerprint changed destroys
-# the stale broadcast before rebuilding.
-_BQ_CACHE: dict[tuple, tuple] = {}
-
-
-def _shared_broadcast(spark: SparkSession, sf_dir: str, kind: str,
-                      params: tuple, build):
-    sc = spark.sparkContext
-    key = _corpus_key(sf_dir)
-    slot = (sc.applicationId, key[0], kind, params)
-    hit = _BQ_CACHE.get(slot)
-    if hit is not None and hit[0] == key:
-        return hit[1]
-    if hit is not None:
+def _release(model) -> None:
+    if isinstance(model, Broadcast):
         try:
-            hit[1].destroy()
+            model.destroy()
         except Exception:  # context already stopped
             pass
-    bq = sc.broadcast(build())
-    _BQ_CACHE[slot] = (key, bq)
-    return bq
 
 
-def _probe_is_small(counted: DataFrame, limit: int) -> bool:
-    key = (counted._jdf.queryExecution().logical().semanticHash(), limit)
-    if key not in _PROBE_CACHE:
-        _PROBE_CACHE[key] = counted.limit(limit + 1).count() <= limit
-    return _PROBE_CACHE[key]
+def _model(spark: SparkSession, sf_dir: str, kind: str, params: tuple, build):
+    """The cached ``build()`` for (corpus, kind, params), derived from
+    the corpus as it is now (see ``_MODELS``)."""
+    path = os.path.abspath(sf_dir)
+    tok = _corpus_token(sf_dir)
+    stale = [k for k, (t, _m) in _MODELS.items() if k[1] == path and t != tok]
+    if stale:
+        for k in stale:
+            _release(_MODELS.pop(k)[1])
+        invalidate_table(sf_dir, "embeddings")
+    key = (spark.sparkContext.applicationId, path, kind, params)
+    if key not in _MODELS:
+        _MODELS[key] = (tok, build())
+    return _MODELS[key][1]
 
 
-# Byte budget for the fused serve paths' driver-held query matrix
-# (r15, ADVICE r14 #3): BROADCAST_QUERY_LIMIT is a ROW cap, but the
-# collected matrix is rows×dim×8 bytes — at dim 64 the 100k-row cap
-# is ~51 MB, at dim 4096 it would be 3.2 GB of driver Python plus the
-# pickled broadcast. The effective row cap is therefore
-# min(row limit, byte budget / row bytes), with the dim probed by one
-# pushed-limit scan and cached per corpus.
-FUSED_QUERY_MAX_BYTES = int(
-    __import__("os").environ.get(
-        "SPARK_GRAFT_FUSED_QUERY_MAX_BYTES", str(256 << 20)
+def clear_models() -> None:
+    """Empty the model cache, destroying its broadcasts: the next build
+    of every serve path re-derives its models from the corpus."""
+    for _tok, m in _MODELS.values():
+        _release(m)
+    _MODELS.clear()
+
+
+def _fixture_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "embeddings").filter(
+        F.col("vec_id") % QUERY_MOD == 0
     )
-)
-_DIM_CACHE: dict[tuple, int] = {}
+
+
+def _fixture_q_small(spark: SparkSession, sf_dir: str, limit: int) -> bool:
+    """Whether the fixture query slice (vec_id % QUERY_MOD == 0) has at
+    most ``limit`` rows. The probe is `limit(n+1).count()` over a
+    pushed-filter parquet scan — Spark's CollectLimit terminates the
+    scan early, so the check never pays a full corpus pass or a re-run
+    of a derived lineage (bucketing, cluster assignment) — and its
+    verdict is cached per corpus, so repeated builds skip the job."""
+    return _model(
+        spark, sf_dir, "q_small", (limit,),
+        lambda: _fixture_queries(spark, sf_dir).limit(limit + 1).count()
+        <= limit,
+    )
 
 
 def _emb_dim(spark: SparkSession, sf_dir: str) -> int:
-    key = _corpus_key(sf_dir)
-    if key not in _DIM_CACHE:
+    def build():
         row = (
             load_table(spark, sf_dir, "embeddings")
             .select(F.size("embedding").alias("d"))
             .limit(1)
             .collect()
         )
-        _DIM_CACHE[key] = int(row[0].d) if row else 0
-    return _DIM_CACHE[key]
+        return int(row[0].d) if row else 0
+
+    return _model(spark, sf_dir, "dim", (), build)
 
 
 def _fused_row_limit(spark: SparkSession, sf_dir: str, row_limit: int) -> int:
@@ -206,6 +217,29 @@ def _fused_row_limit(spark: SparkSession, sf_dir: str, row_limit: int) -> int:
     if dim <= 0:
         return row_limit
     return min(row_limit, FUSED_QUERY_MAX_BYTES // (dim * 8))
+
+
+def _as_matrix(rows, dim: int):
+    """(ids int64[n], mat float64[n, dim]) from collected (id, vector)
+    rows; an empty set still has ``dim`` columns."""
+    import numpy as np  # noqa: PLC0415
+
+    ids = np.asarray([r[0] for r in rows], dtype=np.int64)
+    mat = np.asarray([list(r[1]) for r in rows], dtype=np.float64)
+    return ids, mat.reshape(len(rows), dim)
+
+
+def _query_matrix(spark: SparkSession, sf_dir: str):
+    """(qids, qmat) of the fixture query slice, collected once per
+    corpus — the fused paths' driver-held model input (ADVICE r14 #3:
+    they used to re-collect |Q| embeddings on every build)."""
+    return _model(
+        spark, sf_dir, "qmat", (),
+        lambda: _as_matrix(
+            _fixture_queries(spark, sf_dir).select("vec_id", "embedding").collect(),
+            _emb_dim(spark, sf_dir),
+        ),
+    )
 
 
 # Kernel crossover: at the fixture's dim 64 the JVM F.aggregate fold
@@ -309,7 +343,7 @@ def _qdot_sql(a: str, b: str) -> str:
 def _topp_ids(emb_mat, cq, id_vec, p: int):
     """The ONE top-p assignment implementation (r14): quantized-integer
     matmul + stable argsort. Every consumer — the Arrow assignment
-    kernel, the fused IVF scan kernel's per-batch cell assignment, and
+    kernel, the fused IVF scan's per-batch cell assignment, and
     the driver-side query-probe computation — calls THIS function, so
     their probe lists are bit-identical by construction, not by
     parallel re-implementation. ``id_vec`` is ascending, so a stable
@@ -352,178 +386,91 @@ def _assign_topp_kernel(cents: list[list[float]], ids: list[int], p: int):
     return pandas_udf(_assign, "array<bigint>")
 
 
-def _topk_scan_kernel(bq, top_k: int):
-    """``mapInPandas`` brute-force scorer: per Arrow batch, compute
-    the |batch|×|Q| cosine block and emit the batch's per-query top-k
-    candidates (ordered by cosine DESC, neighbor_id ASC — the same
-    total order the final window uses, so the union of per-batch
-    top-ks provably contains the global top-k). The accumulation runs
-    dimension-ascending (``acc += E[:, i] * q[:, i]`` outer product
-    per i), which IS the left-to-right fold — every cosine is
-    bit-identical to ``dot()``'s HOF form and the oracle's list_sum.
-    Self-pairs (vec_id == query_id) are masked exactly like the join
-    condition. ``bq`` is a Spark broadcast of (qids, qmat)."""
+def _lsh_keys(emb_mat, amat):
+    """Integer sign-bit bucket key per row of ``emb_mat``: bit j is set
+    iff the row's dot with anchor j is ≥ 0 (bit j == anchor j, the
+    ordering of ``lsh_buckets``'s bucket string). The dots accumulate
+    dimension-ascending (``acc += E[:, i] * A[:, i]`` outer product per
+    i — the left-to-right fold), so every sign is bit-identical to
+    ``lsh_buckets``'s ``dot() >= 0`` test and the oracle's list_sum.
+    The ONE key fold: the corpus side (the fused scan's ``assign``)
+    and the driver-side query buckets both call it."""
+    import numpy as np  # noqa: PLC0415
+
+    acc = np.zeros((len(emb_mat), len(amat)))
+    for i in range(emb_mat.shape[1]):  # i ascending == left-to-right fold
+        acc += np.outer(emb_mat[:, i], amat[:, i])
+    return (acc >= 0) @ (1 << np.arange(len(amat), dtype=np.int64))
+
+
+def _single_group(emb_mat):
+    """Brute force's group assignment: every row in group 0."""
+    import numpy as np  # noqa: PLC0415
+
+    return np.zeros(len(emb_mat), dtype=np.int64)
+
+
+def _group_payload(qids, qmat, probes) -> tuple:
+    """The fused scan's broadcast payload: (qids, qmat, group → indices
+    of the queries probing it), where ``probes[j]`` lists the
+    pairwise-distinct groups query j probes."""
+    import numpy as np  # noqa: PLC0415
+
+    to_q: dict[int, list[int]] = {}
+    for j, row in enumerate(probes):
+        for g in row:
+            to_q.setdefault(int(g), []).append(j)
+    return (
+        qids,
+        qmat,
+        {g: np.asarray(js, dtype=np.int64) for g, js in to_q.items()},
+    )
+
+
+def _grouped_scan_kernel(bq, assign, top_k: int):
+    """The ONE fused ANN serve kernel (``mapInPandas`` over the
+    corpus). ``bq`` is a broadcast ``_group_payload``; ``assign`` maps
+    a (rows × dim) float64 block to one integer group per row — brute
+    force puts every row in group 0, LSH uses the sign-bit key
+    (``_lsh_keys``), IVF the nearest cell (``_topp_ids`` p=1). Per
+    Arrow batch, each group present is scored against exactly the
+    queries probing it, so per-batch compute keeps the index's scanned
+    fraction (N/2^bits for LSH, ~nprobe/k for IVF) — this is NOT a
+    masked brute force.
+
+    Cosines accumulate dimension-ascending (``acc += E[:, i] * q[:, i]``
+    outer product per i), which IS the left-to-right fold: every cosine
+    is bit-identical to ``dot()``'s HOF form and the oracle's list_sum,
+    and group selection cannot change a kept pair's value because each
+    acc element accumulates its own scalars in the same i order.
+    Per-(batch, group, query) top-k is emitted under the final
+    window's total order (cosine DESC, neighbor_id ASC): any global
+    top-k pair lives in some group where fewer than k candidates beat
+    it, so the union provably contains the global top-k. Self-pairs
+    (vec_id == query_id) are masked exactly like the join condition."""
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
 
     def kernel(batches):
-        qids, qmat = bq.value
-        nq = len(qids)
-        for b in batches:
-            if len(b) == 0 or nq == 0:
-                continue
-            ids = b["vec_id"].to_numpy(dtype=np.int64)
-            emb_block = np.vstack(b["embedding"].to_numpy()).astype(np.float64)
-            dim = emb_block.shape[1]
-            acc = np.zeros((len(ids), nq))
-            for i in range(dim):  # i ascending == left-to-right fold
-                acc += np.outer(emb_block[:, i], qmat[:, i])
-            out_q: list = []
-            out_n: list = []
-            out_c: list = []
-            for j in range(nq):
-                col = acc[:, j]
-                cand = np.flatnonzero(ids != qids[j])  # no self-pairs
-                if len(cand) == 0:
-                    continue
-                order = np.lexsort((ids[cand], -col[cand]))[:top_k]
-                sel = cand[order]
-                out_q.extend([qids[j]] * len(sel))
-                out_n.extend(ids[sel])
-                out_c.extend(col[sel])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.asarray(out_q, dtype=np.int64),
-                    "neighbor_id": np.asarray(out_n, dtype=np.int64),
-                    "cosine": np.asarray(out_c, dtype=np.float64),
-                }
-            )
-
-    return kernel
-
-
-def _lsh_scan_kernel(bq, anchors: list[list[float]], top_k: int):
-    """Fused LSH serve pass (r15, VERDICT r14 ask #6 — the same shape
-    that won brute force and IVF in r14): ONE ``mapInPandas`` over the
-    corpus replaces {the bucketing projection (n_bits interpreted HOF
-    fold dots per corpus row), the probe-side explode + broadcast +
-    equi-join on the bucket string, and the per-pair interpreted HOF
-    fold}. Per batch: compute each row's anchor dots by
-    dimension-ascending accumulation (``acc += E[:, i] * A[:, i]``
-    outer product per i — the left-to-right fold, so every dot is
-    bit-identical to ``lsh_buckets``'s ``dot() >= 0`` test and the
-    oracle's list_sum), reduce the sign bits to an integer bucket key
-    (bit j == anchor j, the same ordering as the bucket string), then
-    score each bucket-group present against exactly the queries
-    probing that bucket (``bq`` carries bucket-key → query indices:
-    each query probes its own bucket plus the n_bits Hamming-1 flips,
-    so per-batch compute keeps LSH's expected N/2^bits fraction).
-    Cosines accumulate dimension-ascending too — bit-identical to the
-    join path's ``dot()``. Per-(batch, bucket, query) top-k is emitted
-    under the final window's total order (cosine DESC, neighbor_id
-    ASC), so the union provably contains the global top-k (any kept
-    pair lives in some group with fewer than k better candidates
-    anywhere). Self-pairs masked exactly like the join condition."""
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-
-    amat = np.asarray(anchors, dtype=np.float64)  # n_bits × dim
-    nbits = len(anchors)
-    weights = 1 << np.arange(nbits, dtype=np.int64)
-
-    def kernel(batches):
-        qids, qmat, bucket_map = bq.value
+        qids, qmat, group_to_q = bq.value
         for b in batches:
             if len(b) == 0 or len(qids) == 0:
                 continue
             vids = b["vec_id"].to_numpy(dtype=np.int64)
             emb_block = np.vstack(b["embedding"].to_numpy()).astype(np.float64)
-            dim = emb_block.shape[1]
-            acc = np.zeros((len(vids), nbits))
-            for i in range(dim):  # i ascending == left-to-right fold
-                acc += np.outer(emb_block[:, i], amat[:, i])
-            keys = (acc >= 0) @ weights
+            groups = assign(emb_block)
             out_q: list = []
             out_n: list = []
             out_c: list = []
-            for kk in np.unique(keys):
-                qs = bucket_map.get(int(kk))
+            for g in np.unique(groups):
+                qs = group_to_q.get(int(g))
                 if qs is None:
                     continue
-                rows = np.flatnonzero(keys == kk)
-                sub = emb_block[rows]
-                sub_ids = vids[rows]
-                sacc = np.zeros((len(rows), len(qs)))
-                for i in range(dim):  # left-to-right fold again
-                    sacc += np.outer(sub[:, i], qmat[qs, i])
-                for jj, j in enumerate(qs):
-                    col = sacc[:, jj]
-                    cand = np.flatnonzero(sub_ids != qids[j])  # no self
-                    if len(cand) == 0:
-                        continue
-                    order = np.lexsort((sub_ids[cand], -col[cand]))[:top_k]
-                    sel = cand[order]
-                    out_q.extend([qids[j]] * len(sel))
-                    out_n.extend(sub_ids[sel])
-                    out_c.extend(col[sel])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.asarray(out_q, dtype=np.int64),
-                    "neighbor_id": np.asarray(out_n, dtype=np.int64),
-                    "cosine": np.asarray(out_c, dtype=np.float64),
-                }
-            )
-
-    return kernel
-
-
-def _ivf_scan_kernel(bq, cents: list[list[float]], ids: list[int], top_k: int):
-    """Fused IVF serve pass (r14, guide §4.2/§8 — the same shape that
-    won brute force): ONE ``mapInPandas`` over the corpus replaces the
-    {query-side assignment Arrow stage + broadcast + equi-join +
-    interpreted HOF fold}. Per batch: assign each row's coarse cell
-    (``_topp_ids`` p=1 — identical math to ``_assign_topp_kernel``),
-    then for each cell present score ONLY that cell-group against the
-    queries probing the cell (``bq`` carries cell → query indices, so
-    per-batch compute keeps IVF's ~nprobe/k corpus fraction — this is
-    NOT a masked brute force). Cosines accumulate dimension-ascending
-    (``acc += E[:, i] * q[:, i]`` outer product per i) — the
-    left-to-right fold, bit-identical to ``dot()``'s HOF form and the
-    oracle's list_sum; subgroup selection cannot change a kept pair's
-    value because each acc element accumulates its own scalars in the
-    same i order. Per-(batch, cell, query) top-k is emitted under the
-    final window's total order (cosine DESC, neighbor_id ASC): any
-    global top-k pair lives in some group and fewer than k candidates
-    beat it anywhere, so the union provably contains the global
-    top-k. Self-pairs masked exactly like the join condition."""
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-
-    cq = _quantize(np.asarray(cents, dtype=np.float64)).T  # dim × k
-    id_vec = np.asarray(ids, dtype=np.int64)
-
-    def kernel(batches):
-        qids, qmat, cell_to_q = bq.value
-        for b in batches:
-            if len(b) == 0 or len(qids) == 0:
-                continue
-            vids = b["vec_id"].to_numpy(dtype=np.int64)
-            emb_block = np.vstack(b["embedding"].to_numpy()).astype(np.float64)
-            dim = emb_block.shape[1]
-            cells = _topp_ids(emb_block, cq, id_vec, 1)[:, 0]
-            out_q: list = []
-            out_n: list = []
-            out_c: list = []
-            for cell in np.unique(cells):
-                qs = cell_to_q.get(int(cell))
-                if qs is None:
-                    continue
-                rows = np.flatnonzero(cells == cell)
-                sub = emb_block[rows]
-                sub_ids = vids[rows]
+                rows = np.flatnonzero(groups == g)
+                sub, sub_ids, sq = emb_block[rows], vids[rows], qmat[qs]
                 acc = np.zeros((len(rows), len(qs)))
-                for i in range(dim):  # i ascending == left-to-right fold
-                    acc += np.outer(sub[:, i], qmat[qs, i])
+                for i in range(emb_block.shape[1]):  # left-to-right fold
+                    acc += np.outer(sub[:, i], sq[:, i])
                 for jj, j in enumerate(qs):
                     col = acc[:, jj]
                     cand = np.flatnonzero(sub_ids != qids[j])  # no self
@@ -543,6 +490,65 @@ def _ivf_scan_kernel(bq, cents: list[list[float]], ids: list[int], top_k: int):
             )
 
     return kernel
+
+
+def _rank_top_k(scored: DataFrame, top_k: int) -> DataFrame:
+    """(query_id, neighbor_id, cosine) candidates → each query's top_k
+    under (cosine DESC, neighbor_id ASC), numbered ``rn`` from 1."""
+    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return scored.withColumn("rn", F.row_number().over(w)).filter(
+        F.col("rn") <= top_k
+    )
+
+
+def _grouped_scan(emb: DataFrame, bq, assign, top_k: int) -> DataFrame:
+    cand = emb.select("vec_id", "embedding").mapInPandas(
+        _grouped_scan_kernel(bq, assign, top_k),
+        "query_id long, neighbor_id long, cosine double",
+    )
+    return _rank_top_k(cand, top_k)
+
+
+def _fixture_scan(
+    spark: SparkSession, sf_dir: str, kind: str, params: tuple,
+    assign, probes, top_k: int,
+) -> DataFrame:
+    """Fused serve pass for the fixture query slice: the cached query
+    matrix, grouped by ``probes(qmat)`` into ONE shared broadcast per
+    (corpus, kind, params) — ADVICE r14 #2: a fresh, never-destroyed
+    broadcast per build leaked blocks in driver and executors."""
+    qids, qmat = _query_matrix(spark, sf_dir)
+    bq = _model(
+        spark, sf_dir, kind, params,
+        lambda: spark.sparkContext.broadcast(
+            _group_payload(qids, qmat, probes(qmat))
+        ),
+    )
+    return _grouped_scan(_emb_fanout(spark, sf_dir), bq, assign, top_k)
+
+
+def _explicit_query_broadcast(spark: SparkSession, sf_dir: str, qids, qmat):
+    """Broadcast of a caller-supplied query set, keyed by a digest of
+    the collected matrix — never by the query plan, so a query table
+    rewritten under the same plan is never served a stale matrix. At
+    most one stays live per corpus: a new digest destroys the previous
+    broadcast (a frame built from an older query set must be consumed
+    before the next set is served)."""
+    import hashlib  # noqa: PLC0415
+
+    h = hashlib.sha256(qids.tobytes())
+    h.update(repr(qmat.shape).encode())
+    h.update(qmat.tobytes())
+    params = (h.hexdigest(),)
+    path = os.path.abspath(sf_dir)
+    for k in [k for k in _MODELS if k[1:3] == (path, "topk_qx") and k[3] != params]:
+        _release(_MODELS.pop(k)[1])
+    return _model(
+        spark, sf_dir, "topk_qx", params,
+        lambda: spark.sparkContext.broadcast(
+            _group_payload(qids, qmat, [[0]] * len(qids))
+        ),
+    )
 
 
 @register(
@@ -575,8 +581,9 @@ def sim_topk_bruteforce(
     """Exact cosine top-k over a parameterized query set.
 
     With a small Q the scoring is ONE Arrow pass over the corpus
-    (r14): the query matrix rides a Spark broadcast into a
-    ``mapInPandas`` kernel that computes all |batch|×|Q| dots as a
+    (r14): the query matrix rides a Spark broadcast into
+    ``_grouped_scan_kernel`` with every row in one group, which
+    computes all |batch|×|Q| dots as a
     dimension-ascending vectorized accumulation — element order i
     ascending IS the left-to-right fold, so every cosine is
     BIT-IDENTICAL to the previous zip_with/aggregate HOF form and to
@@ -592,62 +599,39 @@ def sim_topk_bruteforce(
     query matrix must fit in memory) is skipped and the r13
     broadcast-join + fold plan runs unchanged; at that size brute
     force is the wrong tool anyway — use the LSH/IVF paths.
-    ``queries`` defaults to the fixture's fixed (query_id, qv) slice.
+    ``queries`` defaults to the fixture's fixed (query_id, qv) slice;
+    an explicit set is collected on every build and broadcast once per
+    distinct content (``_explicit_query_broadcast``).
     """
     emb = _emb_fanout(spark, sf_dir)
-    q = (
-        queries
-        if queries is not None
-        else emb.filter(F.col("vec_id") % QUERY_MOD == 0).select(
+    fused_limit = _fused_row_limit(spark, sf_dir, broadcast_limit)
+    if queries is None:
+        if _fixture_q_small(spark, sf_dir, fused_limit):
+            return _fixture_scan(
+                spark, sf_dir, "topk_q", (), _single_group,
+                lambda qmat: [[0]] * len(qmat), TOP_K,
+            )
+        q = emb.filter(F.col("vec_id") % QUERY_MOD == 0).select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
         )
+        small = _fixture_q_small(spark, sf_dir, broadcast_limit)
+    else:
+        # a caller's query frame is probed on every build: its table
+        # can change under the same plan without touching the corpus
+        q = queries
+        if q.limit(fused_limit + 1).count() <= fused_limit:
+            qids, qmat = _as_matrix(q.collect(), _emb_dim(spark, sf_dir))
+            bq = _explicit_query_broadcast(spark, sf_dir, qids, qmat)
+            return _grouped_scan(emb, bq, _single_group, TOP_K)
+        small = q.limit(broadcast_limit + 1).count() <= broadcast_limit
+    scored = emb.join(
+        F.broadcast(q) if small else q, F.col("vec_id") != F.col("query_id")
+    ).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        dot(F.col("qv"), F.col("embedding")).alias("cosine"),
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    if _probe_is_small(q, _fused_row_limit(spark, sf_dir, broadcast_limit)):
-        import numpy as np  # noqa: PLC0415
-
-        if queries is None:
-            # fixture slice: memoized collect + ONE shared broadcast
-            # per corpus (ADVICE r14 #2/#3 — was a fresh collect job
-            # and a leaked broadcast per build)
-            qids, qmat = _query_matrix(spark, sf_dir)
-            qrows = len(qids) > 0
-            bq = (
-                _shared_broadcast(
-                    spark, sf_dir, "topk_q", (), lambda: (qids, qmat)
-                )
-                if qrows
-                else None
-            )
-        else:
-            qrows = q.collect()
-            if qrows:
-                qids = np.asarray([r[0] for r in qrows], dtype=np.int64)
-                qmat = np.asarray(
-                    [list(r[1]) for r in qrows], dtype=np.float64
-                )
-                bq = spark.sparkContext.broadcast((qids, qmat))
-        if qrows:
-            kernel = _topk_scan_kernel(bq, TOP_K)
-            cand = emb.select("vec_id", "embedding").mapInPandas(
-                kernel, "query_id long, neighbor_id long, cosine double"
-            )
-            return (
-                cand.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") <= TOP_K)
-            )
-    scored = (
-        emb.join(_query_side(q, broadcast_limit), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            dot(F.col("qv"), F.col("embedding")).alias("cosine"),
-        )
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-    )
+    return _rank_top_k(scored, TOP_K)
 
 
 ANCHORS_SQL = f"SELECT vec_id AS aid, embedding AS av FROM embeddings WHERE vec_id < {N_ANCHORS}"
@@ -673,64 +657,14 @@ IVF_ANCHORS_SQL = (
     f"WHERE vec_id < {IVF_K_SQL}"
 )
 
-# corpus row count per fixture key (one metadata-only parquet count)
-_CORPUS_N_CACHE: dict[tuple, int] = {}
-# last-seen fingerprint per corpus dir (drives invalidation)
-_SEEN_TOKEN: dict[str, tuple] = {}
-
-
-def _corpus_token(sf_dir: str) -> tuple:
-    """Metadata fingerprint of the embeddings fixture — (relpath,
-    size, mtime_ns) per data file, file-or-directory parquet. Pure
-    os.stat, no Spark job. A write through ANY path (engine DML,
-    external append, fixture regeneration) changes it, so the derived
-    model caches (k, anchors, centroids) re-derive instead of serving
-    a stale k (VERDICT r13 "What's wrong #2")."""
-    import os  # noqa: PLC0415
-
-    path = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
-    if os.path.isdir(path):
-        entries = []
-        for root, _dirs, files in os.walk(path):
-            for f in sorted(files):
-                fp = os.path.join(root, f)
-                st = os.stat(fp)
-                entries.append(
-                    (os.path.relpath(fp, path), st.st_size, st.st_mtime_ns)
-                )
-        return tuple(entries)
-    if not os.path.exists(path):
-        return ()
-    st = os.stat(path)
-    return ((path, st.st_size, st.st_mtime_ns),)
-
-
-def _corpus_key(sf_dir: str) -> tuple:
-    """(abspath, fingerprint) cache key for the ANN model caches.
-    On a fingerprint CHANGE the shared table-plan cache for the
-    embeddings table is also dropped — a cached scan pins its file
-    listing (and possibly a persisted copy), so the re-derived model
-    must not be computed from a stale scan."""
-    import os  # noqa: PLC0415
-
-    from flink_sql_toolkit_spark.tables import invalidate_table  # noqa: PLC0415
-
-    key = os.path.abspath(sf_dir)
-    tok = _corpus_token(sf_dir)
-    prev = _SEEN_TOKEN.get(key)
-    if prev is not None and prev != tok:
-        invalidate_table(sf_dir, "embeddings")
-    _SEEN_TOKEN[key] = tok
-    return (key, tok)
-
 
 def _ivf_k(spark: SparkSession, sf_dir: str) -> int:
     import math  # noqa: PLC0415
 
-    key = _corpus_key(sf_dir)
-    if key not in _CORPUS_N_CACHE:
-        _CORPUS_N_CACHE[key] = load_table(spark, sf_dir, "embeddings").count()
-    n = _CORPUS_N_CACHE[key]
+    n = _model(
+        spark, sf_dir, "n", (),
+        lambda: load_table(spark, sf_dir, "embeddings").count(),
+    )
     return max(IVF_K_MIN, min(IVF_K_MAX, math.ceil(math.sqrt(n))))
 
 
@@ -751,28 +685,24 @@ def _bucket_sql(src: str = "embeddings") -> str:
 BUCKET_SQL = _bucket_sql()
 
 
-# anchor vectors per (fixture key, width) — n_bits constant-size rows,
-# the LSH "model parameters". Fetched once (pushed-filter scan of
-# vec_id < n_bits) and inlined as literals, exactly the
-# random-Gaussian-planes-broadcast shape production uses.
-_ANCHOR_CACHE: dict[tuple, list[list[float]]] = {}
-
-
 def _anchor_vectors(
     spark: SparkSession, sf_dir: str, n_bits: int = N_ANCHORS
 ) -> list[list[float]]:
-    key = (*_corpus_key(sf_dir), n_bits)
-    if key not in _ANCHOR_CACHE:
+    """The ``n_bits`` anchor vectors (vec_id < n_bits) — the LSH "model
+    parameters", fetched once per corpus by a pushed-filter scan and
+    inlined as literals, the random-Gaussian-planes-broadcast shape
+    production uses."""
+
+    def build():
         rows = (
             load_table(spark, sf_dir, "embeddings")
             .filter(F.col("vec_id") < n_bits)
             .select("vec_id", "embedding")
             .collect()
         )
-        _ANCHOR_CACHE[key] = [
-            list(r.embedding) for r in sorted(rows, key=lambda r: r.vec_id)
-        ]
-    return _ANCHOR_CACHE[key]
+        return [list(r.embedding) for r in sorted(rows, key=lambda r: r.vec_id)]
+
+    return _model(spark, sf_dir, "anchors", (n_bits,), build)
 
 
 def lsh_buckets(
@@ -852,65 +782,33 @@ def sim_lsh_bucketed(
     With a small Q the serve pass is FUSED (r15, the shape that won
     brute force and IVF in r14): the query buckets and their
     Hamming-1 probes are derived on the driver from the memoized
-    query matrix using the SAME dimension-ascending fold the kernel
-    runs, and ONE ``mapInPandas`` corpus pass assigns each batch's
-    buckets and scores bucket-groups against exactly the queries
-    probing them (``_lsh_scan_kernel`` — bit-identical dots, see its
-    docstring). This removes the n_bits-interpreted-HOF bucketing
-    projection, the probe explode, the broadcast equi-join, and the
+    query matrix by the SAME key fold the corpus side runs
+    (``_lsh_keys``), and ONE ``mapInPandas`` corpus pass
+    (``_grouped_scan_kernel``) assigns each batch's buckets and scores
+    bucket-groups against exactly the queries probing them —
+    bit-identical dots, see their docstrings. This removes the
+    n_bits-interpreted-HOF bucketing projection, the probe explode, the broadcast equi-join, and the
     per-pair HOF fold, while keeping LSH's expected N/2^bits per-query
     scan fraction. Past ``broadcast_limit`` the r13/r14 join plan runs
     unchanged: shuffle equi-join on the bucket key (both sides
     partition by bucket — no corpus-sized broadcast ever).
     """
-    q_probe0 = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") % QUERY_MOD == 0
-    )
-    if _probe_is_small(
-        q_probe0, _fused_row_limit(spark, sf_dir, broadcast_limit)
+    if _fixture_q_small(
+        spark, sf_dir, _fused_row_limit(spark, sf_dir, broadcast_limit)
     ):
         import numpy as np  # noqa: PLC0415
 
-        anchors = _anchor_vectors(spark, sf_dir, n_bits)
-        qids, qmat = _query_matrix(spark, sf_dir)
-        if len(qids) > 0:
-
-            def _build_payload():
-                amat = np.asarray(anchors, dtype=np.float64)
-                acc = np.zeros((len(qids), len(anchors)))
-                for i in range(qmat.shape[1]):  # left-to-right fold
-                    acc += np.outer(qmat[:, i], amat[:, i])
-                weights = 1 << np.arange(len(anchors), dtype=np.int64)
-                qkeys = (acc >= 0) @ weights
-                bucket_to_q: dict[int, list[int]] = {}
-                for j, k0 in enumerate(qkeys):
-                    probes = [int(k0)] + [
-                        int(k0) ^ (1 << b) for b in range(len(anchors))
-                    ]
-                    for kk in probes:  # pairwise-distinct by construction
-                        bucket_to_q.setdefault(kk, []).append(j)
-                bucket_map = {
-                    c: np.asarray(js, dtype=np.int64)
-                    for c, js in bucket_to_q.items()
-                }
-                return (qids, qmat, bucket_map)
-
-            bq = _shared_broadcast(
-                spark, sf_dir, "lsh_q", (n_bits,), _build_payload
-            )
-            kernel = _lsh_scan_kernel(bq, anchors, top_k)
-            cand = _emb_fanout(spark, sf_dir).select(
-                "vec_id", "embedding"
-            ).mapInPandas(
-                kernel, "query_id long, neighbor_id long, cosine double"
-            )
-            w_f = W.partitionBy("query_id").orderBy(
-                F.desc("cosine"), F.asc("neighbor_id")
-            )
-            return (
-                cand.withColumn("rn", F.row_number().over(w_f))
-                .filter(F.col("rn") <= top_k)
-            )
+        amat = np.asarray(_anchor_vectors(spark, sf_dir, n_bits), dtype=np.float64)
+        return _fixture_scan(
+            spark, sf_dir, "lsh_q", (n_bits,),
+            lambda e: _lsh_keys(e, amat),
+            # each query probes its own bucket and the Hamming-1 flips
+            lambda qmat: [
+                [k0] + [k0 ^ (1 << b) for b in range(len(amat))]
+                for k0 in map(int, _lsh_keys(qmat, amat))
+            ],
+            top_k,
+        )
     buckets = lsh_buckets(spark, sf_dir, n_bits)
     qb = buckets.filter(F.col("vec_id") % QUERY_MOD == 0)
     flips = F.array(
@@ -929,29 +827,27 @@ def sim_lsh_bucketed(
         F.col("embedding").alias("qv"),
         F.explode(flips).alias("bucket"),
     )
-    q_probe = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") % QUERY_MOD == 0
-    )
     # No distinct needed: a corpus vector lives in exactly ONE bucket
     # and a query's bits+1 probes are pairwise-distinct strings (each
     # flips a different bit), so at most one probe can equal a given
     # neighbor's bucket — (query_id, neighbor_id) is already unique.
     # The oracle's SELECT DISTINCT is a no-op for the same reason;
     # skipping it here removes a full shuffle of the candidate set.
-    scored = (
-        buckets.join(_query_side(q, broadcast_limit, probe=q_probe), "bucket")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            dot(F.col("qv"), F.col("embedding")).alias("cosine"),
-        )
+    small = _fixture_q_small(spark, sf_dir, broadcast_limit)
+    return _join_top_k(
+        buckets.join(F.broadcast(q) if small else q, "bucket"), top_k
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_k)
+
+
+def _join_top_k(pairs: DataFrame, top_k: int) -> DataFrame:
+    """Join-plan tail of the index paths: corpus rows joined to their
+    probing queries → self-pairs dropped, cosines by ``dot``, ranked."""
+    scored = pairs.filter(F.col("vec_id") != F.col("query_id")).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        dot(F.col("qv"), F.col("embedding")).alias("cosine"),
     )
+    return _rank_top_k(scored, top_k)
 
 
 # Quantization scale for the centroid refinement sums: embeddings are
@@ -1014,10 +910,6 @@ def _ivf_assign_sql(nprobe: int) -> str:
 """
 
 
-# refined centroids per (fixture key, k): (cluster ids, mean vectors)
-_CENTROID_CACHE: dict[tuple, tuple[list[int], list[list[float]]]] = {}
-
-
 def _refined_centroids(
     spark: SparkSession, sf_dir: str, k: int = N_ANCHORS
 ) -> tuple[list[int], list[list[float]]]:
@@ -1030,8 +922,8 @@ def _refined_centroids(
     vectors to the driver — the same O(1)-literals shape as
     ``_anchor_vectors``. Empty cells keep no centroid (the id list
     carries the surviving cluster ids)."""
-    key = (*_corpus_key(sf_dir), k)
-    if key not in _CENTROID_CACHE:
+
+    def build():
         import numpy as np  # noqa: PLC0415
         import pandas as pd  # noqa: PLC0415
 
@@ -1081,8 +973,9 @@ def _refined_centroids(
             [s / (float(_CENTROID_Q) * agg[i][0]) for s in agg[i][1]]
             for i in ids
         ]
-        _CENTROID_CACHE[key] = (ids, cents)
-    return _CENTROID_CACHE[key]
+        return ids, cents
+
+    return _model(spark, sf_dir, "centroids", (k,), build)
 
 
 def ivf_assignments(
@@ -1146,7 +1039,7 @@ def sim_ivf_topk(
     assignment implementation, so probes are bit-identical to the
     Arrow kernel's), and ONE ``mapInPandas`` corpus pass assigns each
     batch's cells and scores cell-groups against exactly the queries
-    probing them (``_ivf_scan_kernel``). This removes a second
+    probing them (``_grouped_scan_kernel``). This removes a second
     full-fixed-cost Arrow stage (the query-side assignment — measured
     ~0.2 s of per-stage Python-runner overhead at ANY row count, see
     OPTIMIZATION_r14.md), the broadcast exchange, the equi-join, and
@@ -1158,50 +1051,20 @@ def sim_ivf_topk(
     """
     if k is None:
         k = _ivf_k(spark, sf_dir)
-    q_small = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") % QUERY_MOD == 0
-    )
-    if _probe_is_small(
-        q_small, _fused_row_limit(spark, sf_dir, broadcast_limit)
+    if _fixture_q_small(
+        spark, sf_dir, _fused_row_limit(spark, sf_dir, broadcast_limit)
     ):
         import numpy as np  # noqa: PLC0415
 
         ids, cents = _refined_centroids(spark, sf_dir, k)
-        qids, qmat = _query_matrix(spark, sf_dir)
-        if len(qids) > 0:
-            emb = _emb_fanout(spark, sf_dir)
-
-            def _build_payload():
-                cq = _quantize(np.asarray(cents, dtype=np.float64)).T
-                id_vec = np.asarray(ids, dtype=np.int64)
-                probes = _topp_ids(qmat, cq, id_vec, min(nprobe, len(ids)))
-                cell_to_q: dict[int, list[int]] = {}
-                for j, row in enumerate(probes):
-                    for cell in row:
-                        cell_to_q.setdefault(int(cell), []).append(j)
-                cell_map = {
-                    c: np.asarray(js, dtype=np.int64)
-                    for c, js in cell_to_q.items()
-                }
-                return (qids, qmat, cell_map)
-
-            # one shared broadcast per (corpus, k, nprobe) — ADVICE
-            # r14 #2: was a fresh (and never-destroyed) broadcast per
-            # build, two per sim_ivf_family call
-            bq = _shared_broadcast(
-                spark, sf_dir, "ivf_q", (k, nprobe), _build_payload
-            )
-            kernel = _ivf_scan_kernel(bq, cents, ids, top_k)
-            cand = emb.select("vec_id", "embedding").mapInPandas(
-                kernel, "query_id long, neighbor_id long, cosine double"
-            )
-            w_f = W.partitionBy("query_id").orderBy(
-                F.desc("cosine"), F.asc("neighbor_id")
-            )
-            return (
-                cand.withColumn("rn", F.row_number().over(w_f))
-                .filter(F.col("rn") <= top_k)
-            )
+        cq = _quantize(np.asarray(cents, dtype=np.float64)).T  # dim × k
+        id_vec = np.asarray(ids, dtype=np.int64)
+        return _fixture_scan(
+            spark, sf_dir, "ivf_q", (k, nprobe),
+            lambda e: _topp_ids(e, cq, id_vec, 1)[:, 0],
+            lambda qmat: _topp_ids(qmat, cq, id_vec, min(nprobe, len(ids))),
+            top_k,
+        )
     ivf = ivf_assignments(spark, sf_dir, k, nprobe=nprobe)
     # probes are pairwise-distinct cluster ids by construction (stable
     # argsort positions), and each corpus vector has ONE cluster_id,
@@ -1218,22 +1081,9 @@ def sim_ivf_topk(
         F.col("embedding").alias("qv"),
         F.explode_outer("probes").alias("cluster_id"),
     )
-    q_probe = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") % QUERY_MOD == 0
-    )
-    scored = (
-        ivf.join(_query_side(q, broadcast_limit, probe=q_probe), "cluster_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            dot(F.col("qv"), F.col("embedding")).alias("cosine"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_k)
+    small = _fixture_q_small(spark, sf_dir, broadcast_limit)
+    return _join_top_k(
+        ivf.join(F.broadcast(q) if small else q, "cluster_id"), top_k
     )
 
 
@@ -1459,16 +1309,4 @@ def sim_ivf_topk_bucketed(
         "qv",
         F.explode(probes_col).alias("cluster_id"),
     )
-    scored = (
-        corpus.join(q, "cluster_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            dot(F.col("qv"), F.col("embedding")).alias("cosine"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= TOP_K
-    )
+    return _join_top_k(corpus.join(q, "cluster_id"), TOP_K)

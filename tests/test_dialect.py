@@ -518,3 +518,63 @@ def test_tvf_arity_typed_error():
         rewrite("SELECT * FROM TABLE(CUMULATE(t))")
     with pytest.raises(ValueError, match="at least"):
         rewrite("SELECT * FROM TABLE(TUMBLE(TABLE t, DESCRIPTOR(ts)))")
+
+
+class TestQuantifiedSubqueries:
+    """`= ANY|SOME (subquery)` and `<> ALL (subquery)` are exact
+    spellings of IN / NOT IN; Spark SQL parses neither, so the
+    rewriter maps them and rejects every other quantified comparison
+    with a typed error."""
+
+    @pytest.mark.parametrize(
+        ("flink", "spark"),
+        [
+            ("a = ANY (SELECT b FROM u)", "a IN (SELECT b FROM u)"),
+            ("a=some(select b from u)", "a IN (select b from u)"),
+            ("a <> ALL (SELECT b FROM u)", "a NOT IN (SELECT b FROM u)"),
+            ("a != ALL ((SELECT b FROM u))", "a NOT IN ((SELECT b FROM u))"),
+        ],
+    )
+    def test_rewrites_to_in(self, flink, spark):
+        assert rewrite(f"SELECT a FROM t WHERE {flink}") == (
+            f"SELECT a FROM t WHERE {spark}"
+        )
+
+    @pytest.mark.parametrize(
+        "cond",
+        [
+            "a > ANY (SELECT b FROM u)",
+            "a <= ALL (SELECT b FROM u)",
+            "a = ALL (SELECT b FROM u)",
+            "a <> SOME (SELECT b FROM u)",
+        ],
+    )
+    def test_other_quantified_comparisons_rejected(self, cond):
+        with pytest.raises(NotImplementedError, match="= ANY|SOME"):
+            rewrite(f"SELECT a FROM t WHERE {cond}")
+
+    def test_like_any_list_and_union_all_untouched(self):
+        for sql in (
+            "SELECT a FROM t WHERE s LIKE ANY ('x%', 'y%')",
+            "SELECT a FROM t WHERE s NOT LIKE ALL ('x%', 'y%')",
+            "SELECT a FROM t UNION ALL (SELECT b FROM u)",
+            "SELECT a FROM t WHERE s = 'x = ANY (SELECT 1)'",
+        ):
+            assert rewrite(sql) == sql
+
+    def test_null_semantics_match_duckdb(self, spark):
+        """Spark on the rewrite vs DuckDB's native quantified
+        comparison, with NULL on either side of the comparison."""
+        import duckdb
+
+        t = "(VALUES (1), (2), (CAST(NULL AS INT))) AS t(x)"
+        con = duckdb.connect()
+        try:
+            for sub in ("SELECT 1", "SELECT 1 UNION ALL SELECT NULL"):
+                for cond in (f"x = ANY ({sub})", f"x <> ALL ({sub})"):
+                    sql = f"SELECT x FROM {t} WHERE {cond} ORDER BY x"
+                    want = [r[0] for r in con.execute(sql).fetchall()]
+                    got = [r[0] for r in spark.sql(rewrite(sql)).collect()]
+                    assert got == want, (cond, sub)
+        finally:
+            con.close()

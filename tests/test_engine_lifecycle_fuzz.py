@@ -199,6 +199,31 @@ def test_drop_unreadable_connector_table(spark, tmp_path):
         assert "dr_unread" not in shown
         with pytest.raises(LookupError):
             sess.execute_statement("DROP TABLE dr_unread")
+        # DROP DATABASE … CASCADE and DROP CATALOG run the same
+        # teardown: no stale unreadable marker survives either
+        sess.execute_statement(
+            "CREATE CATALOG drc WITH ('type'='generic_in_memory',"
+            "'default-database'='main')"
+        )
+        sess.execute_statement("USE CATALOG drc")
+        for db in ("casc", "kept"):
+            sess.execute_statement(f"CREATE DATABASE {db}")
+            sess.execute_statement(f"USE {db}")
+            sess.execute_statement(
+                f"CREATE TABLE dr_{db} (id BIGINT) WITH "
+                f"('connector'='filesystem', 'path'='{tmp_path}/none_{db}', "
+                f"'format'='parquet')"
+            )
+            assert f"dr_{db}" in sess.unreadable_tables
+        sess.execute_statement("USE main")
+        sess.execute_statement("DROP DATABASE casc CASCADE")
+        assert "dr_casc" not in sess.connector_tables
+        assert "dr_casc" not in sess.unreadable_tables
+        assert "dr_kept" in sess.unreadable_tables
+        sess.execute_statement("USE CATALOG spark_catalog")
+        sess.execute_statement("DROP CATALOG drc")
+        assert "dr_kept" not in sess.connector_tables
+        assert "dr_kept" not in sess.unreadable_tables
     finally:
         sess.close()
 

@@ -162,6 +162,111 @@ def test_ivf_fused_scan_matches_join_plan_bit_for_bit(spark, sf_dir):
             assert x.cosine == y.cosine  # exact, not approx
 
 
+def test_bruteforce_fused_scan_matches_join_plan_bit_for_bit(spark, sf_dir):
+    """The fused brute-force pass (one group per batch in the shared
+    grouped scan kernel) must reproduce the nested-loop join plan
+    exactly — same (query_id, neighbor_id, rn) and the same cosine
+    double bits — for the fixture query slice and for an explicit
+    ``queries`` frame. broadcast_limit=0 forces the join plan."""
+    from flink_sql_toolkit_spark.operators.similarity import (
+        sim_topk_bruteforce,
+    )
+    from flink_sql_toolkit_spark.tables import load_table
+
+    explicit = (
+        load_table(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") % 37 == 1)
+        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
+    )
+    for queries in (None, explicit):
+        fused = sim_topk_bruteforce(spark, sf_dir, queries=queries)
+        joined = sim_topk_bruteforce(
+            spark, sf_dir, queries=queries, broadcast_limit=0
+        )
+        key = lambda r: (r.query_id, r.rn)  # noqa: E731
+        a = sorted(fused.collect(), key=key)
+        b = sorted(joined.collect(), key=key)
+        assert len(a) == len(b) and len(a) > 0
+        for x, y in zip(a, b):
+            assert (x.query_id, x.neighbor_id, x.rn) == (
+                y.query_id,
+                y.neighbor_id,
+                y.rn,
+            )
+            assert x.cosine == y.cosine  # exact, not approx
+
+
+def test_model_cache_shares_and_destroys_broadcasts(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Builds with one explicit query set share ONE broadcast (it used
+    to be a fresh, never-destroyed broadcast per build), and a corpus
+    write evicts every model of that corpus: the fused LSH path's
+    previous broadcast is destroyed and no entry stamped with the old
+    fingerprint survives the next lookup."""
+    import shutil
+
+    import duckdb
+    from pyspark import SparkContext
+
+    from flink_sql_toolkit_spark.operators import similarity as sim
+    from flink_sql_toolkit_spark.tables import load_table
+
+    src = f"{sf_dir}/embeddings.parquet"
+    d = str(tmp_path)
+    dst = tmp_path / "embeddings.parquet"
+    shutil.copy(src, dst)
+
+    made = []
+    real_broadcast = SparkContext.broadcast
+
+    def counting_broadcast(self, value):
+        bc = real_broadcast(self, value)
+        made.append(bc)
+        return bc
+
+    monkeypatch.setattr(SparkContext, "broadcast", counting_broadcast)
+
+    queries = (
+        load_table(spark, d, "embeddings")
+        .filter(F.col("vec_id") % 97 == 3)
+        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
+    )
+    results = [
+        {tuple(r) for r in sim.sim_topk_bruteforce(spark, d, queries=queries).collect()}
+        for _ in range(5)
+    ]
+    assert len(made) == 1, f"{len(made)} broadcasts for one query set"
+    assert all(r == results[0] for r in results) and results[0]
+
+    made.clear()
+    before = sim.sim_lsh_bucketed(spark, d).collect()
+    assert len(made) == 1
+    lsh_bq = made[0]
+    old_token = sim._corpus_token(d)
+    assert any(t == old_token for t, _m in sim._MODELS.values())
+
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE t AS SELECT * FROM '{src}'")
+    con.execute(
+        f"""COPY (
+              SELECT * FROM t
+              UNION ALL SELECT vec_id + 10000000, embedding, label FROM t
+            ) TO '{dst}' (FORMAT PARQUET)"""
+    )
+    con.close()
+
+    made.clear()
+    grown = sim.sim_lsh_bucketed(spark, d).collect()
+    assert not lsh_bq._jbroadcast.isValid()  # stale broadcast destroyed
+    assert len(made) == 1 and made[0]._jbroadcast.isValid()
+    assert all(t != old_token for t, _m in sim._MODELS.values())
+    # the re-derived query slice covers the grown corpus
+    assert len({r.query_id for r in grown}) == 2 * len(
+        {r.query_id for r in before}
+    )
+
+
 def test_topk_is_k_per_query(spark, sf_dir):
     out = QUERIES["sim_topk_bruteforce"](spark, sf_dir).collect()
     per_query = {}

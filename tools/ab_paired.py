@@ -21,7 +21,8 @@ under the version's OWN cache policy.
 
 Usage:
     python tools/ab_paired.py QUERY[,QUERY...] [--pairs N] [--base REF]
-        [--mod path ...]  # changed module(s), default: auto from git diff
+        [--mod MODULE ...]  # changed module, a.b or a/b.py (repeatable);
+                            # default: auto from git diff
 Prints per-query median pair delta (cur vs base, negative = faster)
 and win counts; exits 0.
 """
@@ -119,7 +120,8 @@ def main() -> None:
     ap.add_argument("--pairs", type=int, default=7)
     ap.add_argument("--base", default="HEAD")
     ap.add_argument("--mod", action="append", default=None,
-                    help="changed module name(s); default from git diff")
+                    help="changed module (a.b or a/b.py); repeatable; "
+                    "default from git diff")
     ap.add_argument("--sf", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--timed-runs", type=int, default=2)
@@ -127,7 +129,14 @@ def main() -> None:
     names = args.queries.split(",")
 
     if args.mod:
-        changed = args.mod
+        # a dotted module name or its path (a/b.py, ./a/b.py)
+        changed = [
+            m.removeprefix("./").removesuffix(".py").replace("/", ".")
+            for m in args.mod
+        ]
+        unknown = [m for m in changed if m not in MODULE_ORDER]
+        if unknown:
+            ap.error(f"--mod {unknown}: not in {MODULE_ORDER}")
     else:
         diff = subprocess.run(
             ["git", "diff", "--name-only", args.base, "--"],
