@@ -36,6 +36,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from flink_sql_toolkit_spark import tables  # noqa: E402
 from flink_sql_toolkit_spark.operators import (  # noqa: E402
     asof,
     dedup,
@@ -129,25 +130,29 @@ HEADLINE = [
 ]
 
 
+# 5 iters minimum (r3 ran 3): the set's dominant noise is JVM
+# GC/JIT landing inside a measured run — a 5-sample median
+# tolerates two polluted runs, and the requested-GC below keeps
+# collections out of the measured window. On top of that, ADAPTIVE
+# refinement (r4 ask #4): while the trimmed spread still exceeds
+# SPREAD_TARGET, run 2 more iterations (up to MAX_ITERS) — a query
+# with an unlucky GC run gets more samples until the median is
+# resolvable at the 0.3 s level instead of polluting the round's
+# comparison.
+ITERS = 5
+MAX_ITERS = 11
+SPREAD_TARGET = 0.3
+# timed runs of the production-hash and cold-cache co-reports
+PROD_ITERS = 3
+COLD_ITERS = 3
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = build_spark("bench")
     queries = {**entrymod.queries(), **UNREGISTERED}
     # warm-up: JVM, codegen, parquet footer reads
     queries["q1_pricing_summary"](spark, sf_dir).count()
-
-    # 5 iters minimum (r3 ran 3): the set's dominant noise is JVM
-    # GC/JIT landing inside a measured run — a 5-sample median
-    # tolerates two polluted runs, and the requested-GC below keeps
-    # collections out of the measured window. On top of that, ADAPTIVE
-    # refinement (r4 ask #4): while the trimmed spread still exceeds
-    # SPREAD_TARGET, run 2 more iterations (up to MAX_ITERS) — a query
-    # with an unlucky GC run gets more samples until the median is
-    # resolvable at the 0.3 s level instead of polluting the round's
-    # comparison.
-    iters = int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "5"))
-    max_iters = int(os.environ.get("SPARK_GRAFT_BENCH_MAX_ITERS", "11"))
-    spread_target = float(os.environ.get("SPARK_GRAFT_BENCH_SPREAD", "0.3"))
 
     def trimmed(runs: list[float]) -> list[float]:
         # drop the single best and worst run (two each past 8 samples)
@@ -182,13 +187,13 @@ def main() -> None:
             return time.perf_counter() - t0
 
         one_run()  # uncounted warm-up (file listing, codegen, broadcast)
-        for _ in range(iters):
+        for _ in range(ITERS):
             runs.append(one_run())
         while (
-            len(runs) < max_iters
-            and max(trimmed(runs)) - min(trimmed(runs)) > spread_target
+            len(runs) < MAX_ITERS
+            and max(trimmed(runs)) - min(trimmed(runs)) > SPREAD_TARGET
         ):
-            # one run per check so the loop cannot overshoot max_iters
+            # one run per check so the loop cannot overshoot MAX_ITERS
             runs.append(one_run())
         mid = trimmed(runs)
         timings[name] = round(statistics.median(runs), 3)
@@ -207,26 +212,24 @@ def main() -> None:
     # Reported in a SEPARATE key — "queries" and "value" keep the
     # exact r1-r14 query set and totals, so rounds stay comparable.
     production: dict[str, float] = {}
-    prod_iters = int(os.environ.get("SPARK_GRAFT_BENCH_PROD_ITERS", "3"))
-    if prod_iters > 0:
 
-        def prod_minhash(s, d):
-            return dedup.dedup_minhash_lsh(s, d, hash_fn="xxhash64")
+    def prod_minhash(s, d):
+        return dedup.dedup_minhash_lsh(s, d, hash_fn="xxhash64")
 
-        runs = []
+    runs = []
+    prod_minhash(spark, sf_dir).write.format("noop").mode(
+        "overwrite"
+    ).save()  # uncounted warm-up
+    for _ in range(PROD_ITERS):
+        spark.sparkContext._jvm.System.gc()
+        t0 = time.perf_counter()
         prod_minhash(spark, sf_dir).write.format("noop").mode(
             "overwrite"
-        ).save()  # uncounted warm-up
-        for _ in range(prod_iters):
-            spark.sparkContext._jvm.System.gc()
-            t0 = time.perf_counter()
-            prod_minhash(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            runs.append(time.perf_counter() - t0)
-        production["dedup_minhash_xxhash64"] = round(
-            statistics.median(runs), 3
-        )
+        ).save()
+        runs.append(time.perf_counter() - t0)
+    production["dedup_minhash_xxhash64"] = round(
+        statistics.median(runs), 3
+    )
 
     # ---- cold-cache pass (VERDICT r14 ask #2) ----------------------
     # Same queries, hot-table cache DISABLED (budget forced to 0, all
@@ -238,33 +241,26 @@ def main() -> None:
     # ANN models (k, anchors, centroids, query matrix, broadcasts)
     # every time.
     cold: dict[str, float] = {}
-    cold_iters = int(os.environ.get("SPARK_GRAFT_BENCH_COLD_ITERS", "3"))
-    if cold_iters > 0:
-        from flink_sql_toolkit_spark import tables as _tables  # noqa: PLC0415
-        from flink_sql_toolkit_spark.operators import (  # noqa: PLC0415
-            similarity as _similarity,
-        )
-
-        _tables.HOT_CACHE_BUDGET_BYTES = 0
-        _tables._PLAN_CACHE.clear()
-        _tables._CACHE_SPEND.clear()
-        spark.catalog.clearCache()
-        for name in HEADLINE:
-            if name not in queries:
-                continue
+    tables.HOT_CACHE_BUDGET_BYTES = 0
+    tables._PLAN_CACHE.clear()
+    tables._CACHE_SPEND.clear()
+    spark.catalog.clearCache()
+    for name in HEADLINE:
+        if name not in queries:
+            continue
+        queries[name](spark, sf_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()  # uncounted: file listing + codegen of the fresh plan
+        runs = []
+        for _ in range(COLD_ITERS):
+            similarity.clear_models()
+            spark.sparkContext._jvm.System.gc()
+            t0 = time.perf_counter()
             queries[name](spark, sf_dir).write.format("noop").mode(
                 "overwrite"
-            ).save()  # uncounted: file listing + codegen of the fresh plan
-            runs = []
-            for _ in range(cold_iters):
-                _similarity.clear_models()
-                spark.sparkContext._jvm.System.gc()
-                t0 = time.perf_counter()
-                queries[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                runs.append(time.perf_counter() - t0)
-            cold[name] = round(statistics.median(runs), 3)
+            ).save()
+            runs.append(time.perf_counter() - t0)
+        cold[name] = round(statistics.median(runs), 3)
 
     calib_end, load_end = calibrate(), loadavg1()
     # calibration-normalized medians: raw * (ref / adjacent-calib).
@@ -282,7 +278,7 @@ def main() -> None:
             "unit": "sec",
             "queries": timings,
             "sf": sf_dir,
-            "iters": iters,
+            "iters": ITERS,
             # medians are the honest headline; best-of mirrors the
             # round-1 BASELINE statistic (best of repeated runs) so
             # rounds stay comparable: local run-to-run noise is
@@ -317,7 +313,7 @@ def main() -> None:
             # are separable without a second bench invocation
             "queries_cold": cold,
             "value_cold": round(sum(cold.values()), 3),
-            "cold_iters": cold_iters,
+            "cold_iters": COLD_ITERS,
             # production-hash paths not gated by the DuckDB oracle
             # (VERDICT r14 ask #8): NOT part of "queries"/"value"
             "queries_production": production,

@@ -14,6 +14,7 @@ continuous jobs, a 1000-row ring buffer for live results.
 from __future__ import annotations
 
 import logging
+import math
 import re
 import tempfile
 import uuid
@@ -120,6 +121,34 @@ def _is_table_not_found(e: Exception) -> bool:
     )
 
 
+# Flink TimeUtils duration labels (singular/plural + short forms;
+# note bare 'm' = MINUTES, not millis), as milliseconds per unit
+_DURATION_MS = {
+    **dict.fromkeys(["ns", "nano", "nanos", "nanosecond", "nanoseconds"], 1e-6),
+    **dict.fromkeys(["us", "µs", "micro", "micros", "microsecond", "microseconds"], 1e-3),
+    **dict.fromkeys(["ms", "milli", "millis", "millisecond", "milliseconds"], 1),
+    **dict.fromkeys(["s", "sec", "secs", "second", "seconds"], 1000),
+    **dict.fromkeys(["m", "min", "mins", "minute", "minutes"], 60_000),
+    **dict.fromkeys(["h", "hour", "hours"], 3_600_000),
+    **dict.fromkeys(["d", "day", "days"], 86_400_000),
+}
+
+
+def _flink_duration_ms(raw: str) -> float | None:
+    """A Flink duration ('500', '10 s', '5m', '1 h 30 min') in
+    milliseconds; a bare number is ms and compound spellings sum.
+    None if any part of it is not a duration."""
+    raw = raw.strip()
+    total, pos = 0.0, 0
+    for tok in re.finditer(r"(\d+)\s*([a-zA-Zµ]*)\s*", raw):
+        factor = _DURATION_MS.get(tok.group(2).lower() or "ms")
+        if tok.start() != pos or factor is None:
+            return None
+        total += int(tok.group(1)) * factor
+        pos = tok.end()
+    return total if pos == len(raw) and raw else None
+
+
 class Operation:
     """A submitted statement: status + token-paged result fetch."""
 
@@ -155,25 +184,50 @@ class Operation:
         # True iff the result's leading column is a changelog RowKind
         # `op` column (set by the streaming result binder)
         self.changelog_result = False
+        # False while an async submit is still executing: fetch answers
+        # NOT_READY until then
+        self._ready = True
+        # temp views the statement registered (MATCH_RECOGNIZE / routed
+        # OVER outputs); cancel() drops them
+        self._temp_views: list[str] = []
+        # beyond-watermark drop counters of a routed streaming SELECT:
+        # the operator's accumulator, plus Spark's own watermark drops
+        # summed once per batch id up to the highest batch seen
+        self._late_acc = None
+        self._wm_seen_batch = -1
+        self._wm_dropped_cum = 0
 
     # -- execution ----------------------------------------------------
 
     def execute(self) -> "Operation":
+        """Run the statement and settle its status: the one lifecycle
+        behind the synchronous ``execute_statement``, the async
+        ``submit_statement`` worker and statement-set members. A
+        streaming SELECT stays RUNNING while its job feeds the result
+        buffer; an operation canceled mid-run stays CANCELED."""
+        sess = self.session
+        mode_before = sess.runtime_mode
         try:
             self._execute()
-            if self.status == "PENDING":
+            # before the client can observe completion: a client that
+            # saw this SET reach EOS must find the views already
+            # re-registered when its next statement runs
+            sess._after_statement(mode_before)
+            if self.status in ("PENDING", "RUNNING") and self._stream_buffer is None:
                 self.status = "FINISHED"
         except Exception as e:  # noqa: BLE001
             self.status = "ERROR"
             self.error = e
             raise
+        finally:
+            self._ready = True
         return self
 
     def _execute(self) -> None:
         stmt = strip_leading_comments(self.statement).rstrip(";").strip()
         sess = self.session
         if not stmt:  # comment-only statement
-            self._columns, self._rows = [{"name": "result", "logicalType": "string"}], [["OK"]]
+            self._columns, self._rows = commands.ok_result()
             return
         for pat, msg in _UNSUPPORTED.items():
             if pat.match(stmt):
@@ -231,7 +285,7 @@ class Operation:
                 f"CREATE OR REPLACE TEMPORARY VIEW {vm.group(4)} AS {rewrite(vm.group(5))}"
             )
             sess.metadata.invalidate()
-            self._columns, self._rows = [{"name": "result", "logicalType": "string"}], [["OK"]]
+            self._columns, self._rows = commands.ok_result()
             return
         dm = re.match(r"(?is)^DROP\s+(TABLE|TEMPORARY\s+TABLE|VIEW|TEMPORARY\s+VIEW)\s+(IF\s+EXISTS\s+)?([\w`]+)\s*$", stmt)
         if dm and "." not in dm.group(3):
@@ -285,7 +339,7 @@ class Operation:
                             f"table or view '{name}' not found"
                         ) from None
                     raise
-            self._columns, self._rows = [{"name": "result", "logicalType": "string"}], [["OK"]]
+            self._columns, self._rows = commands.ok_result()
             return
         # MATCH_RECOGNIZE: no Spark SQL equivalent — the CEP operator
         # runs as a DataFrame op and the statement is rewritten to
@@ -298,9 +352,7 @@ class Operation:
             stmt = rewrite_match_recognize_sql(
                 sess.spark, stmt, ttl_ms=sess.state_ttl_ms()
             )
-            self._temp_views = list(getattr(self, "_temp_views", [])) + re.findall(
-                r"\b_mr_out_\d+\b", stmt
-            )
+            self._temp_views += re.findall(r"\b_mr_out_\d+\b", stmt)
             self._late_acc = getattr(stmt, "late_acc", None)
         # everything else: the dialect rewrite + spark.sql
         df = sess.spark.sql(rewrite(stmt))
@@ -342,8 +394,7 @@ class Operation:
         exists = name in sess.connector_tables or sess.spark.catalog.tableExists(name)
         if exists:
             if m.group("ine"):
-                self._columns = [{"name": "result", "logicalType": "string"}]
-                self._rows = [["OK"]]
+                self._columns, self._rows = commands.ok_result()
                 return
             raise ValueError(f"table '{name}' already exists")
         query = m.group("query").strip()
@@ -517,8 +568,7 @@ class Operation:
             if "path" in table.options:
                 sess.spark.catalog.refreshByPath(table.options["path"])
             sess.refresh_connector_views()
-            self._columns = [{"name": "result", "logicalType": "string"}]
-            self._rows = [["OK"]]
+            self._columns, self._rows = commands.ok_result()
 
     def _execute_statement_set(self, stmt: str) -> None:
         """Flink executes a STATEMENT SET as ONE job with one
@@ -697,9 +747,7 @@ class Operation:
             # the routing registered `_over_out_N` temp view(s); track
             # them so cancel() drops them instead of leaking catalog
             # entries across a long-lived interactive session
-            self._temp_views = list(getattr(self, "_temp_views", [])) + re.findall(
-                r"\b_(?:over|dedup)_out_\d+\b", routed
-            )
+            self._temp_views += re.findall(r"\b_(?:over|dedup)_out_\d+\b", routed)
             self._late_acc = getattr(routed, "late_acc", None)
             _bind_result(df, getattr(routed, "op_passthrough", False))
             q = _start_any(df)
@@ -715,7 +763,7 @@ class Operation:
     def fetch(self, token: int = 0) -> dict[str, Any]:
         if self.status == "ERROR":
             raise self.error if self.error else RuntimeError("operation failed")
-        if not getattr(self, "_ready", True) and self._stream_buffer is None:
+        if not self._ready and self._stream_buffer is None:
             return {
                 "columns": [],
                 "data": [],
@@ -743,7 +791,7 @@ class Operation:
                     "isStreaming": True,
                 }
             )
-            late_acc = getattr(self, "_late_acc", None)
+            late_acc = self._late_acc
             if late_acc is not None:
                 # beyond-watermark drops — Flink's numLateRecordsDropped
                 # metric, surfaced like evictedKeys/skippedRows (VERDICT
@@ -768,7 +816,7 @@ class Operation:
                         # (review r9)
                         last = self._stream_query.lastProgress
                         last_bid = -1 if last is None else last["batchId"]
-                        seen = getattr(self, "_wm_seen_batch", -1)
+                        seen = self._wm_seen_batch
                         if last_bid > seen:
                             # advance the seen mark to the max batch
                             # actually SUMMED, not to the (possibly
@@ -781,9 +829,7 @@ class Operation:
                                 bid = prog["batchId"]
                                 if bid <= seen:
                                     continue
-                                self._wm_dropped_cum = getattr(
-                                    self, "_wm_dropped_cum", 0
-                                ) + sum(
+                                self._wm_dropped_cum += sum(
                                     so.get("numRowsDroppedByWatermark", 0)
                                     for so in prog.get("stateOperators", [])
                                 )
@@ -791,7 +837,7 @@ class Operation:
                             self._wm_seen_batch = newest
                     except Exception:  # noqa: BLE001 — metrics are best-effort
                         pass
-                page["lateDropped"] = late_acc.value + getattr(self, "_wm_dropped_cum", 0)
+                page["lateDropped"] = late_acc.value + self._wm_dropped_cum
             return page
         start = token * PAGE_SIZE
         self._pull_until(start + PAGE_SIZE)
@@ -844,12 +890,12 @@ class Operation:
 
     def cancel(self) -> None:
         """Best-effort, idempotent (reference tolerates every state)."""
-        for v in getattr(self, "_temp_views", ()):
+        for v in self._temp_views:
             try:
                 self.session.spark.catalog.dropTempView(v)
             except Exception:  # noqa: BLE001
                 pass
-        self._temp_views = ()
+        self._temp_views = []
         if self._stream_query is not None:
             try:
                 if self._stream_query.isActive:
@@ -921,10 +967,7 @@ class EngineSession:
     def execute_statement(self, statement: str) -> Operation:
         op = Operation(self, statement)
         self.operations[op.handle] = op
-        mode_before = self.runtime_mode
-        op.execute()
-        self._after_statement(mode_before)
-        return op
+        return op.execute()
 
     def _after_statement(self, mode_before: str) -> None:
         # switching batch/streaming re-registers connector views in
@@ -956,19 +999,9 @@ class EngineSession:
 
         def run() -> None:
             try:
-                mode_before = self.runtime_mode
-                op._execute()
-                # before the client can observe completion: a client
-                # that saw this SET reach EOS must find the views
-                # already re-registered when its next statement runs
-                self._after_statement(mode_before)
-                if op.status == "RUNNING" and op._stream_buffer is None:
-                    op.status = "FINISHED"
-            except Exception as e:  # noqa: BLE001
-                op.status = "ERROR"
-                op.error = e
-            finally:
-                op._ready = True
+                op.execute()
+            except Exception:  # noqa: BLE001 — recorded in op.status / op.error
+                pass
 
         threading.Thread(target=run, daemon=True).start()
         return op
@@ -981,7 +1014,7 @@ class EngineSession:
     def register_connector_table(self, stmt: str):
         table = parse_create_table(stmt + ";")
         if table.name in self.connector_tables and table.if_not_exists:
-            return [{"name": "result", "logicalType": "string"}], [["OK"]]
+            return commands.ok_result()
         key_fmt = table.options.get("key.format", "json")
         if table.connector in ("kafka", "upsert-kafka") and key_fmt != "json":
             # surface the limitation at CREATE TABLE, not first write
@@ -1011,7 +1044,7 @@ class EngineSession:
         self.metadata.invalidate("tables")
         self.metadata.invalidate("views")
         self.metadata.invalidate_table(table.name)
-        return [{"name": "result", "logicalType": "string"}], [["OK"]]
+        return commands.ok_result()
 
     def register_like_table(self, stmt: str):
         """``CREATE TABLE new … LIKE src (like_options)`` (Flink table
@@ -1029,7 +1062,7 @@ class EngineSession:
         name = m.group("name").strip("`")
         if name in self.connector_tables or self.spark.catalog.tableExists(name):
             if m.group("ine"):
-                return [{"name": "result", "logicalType": "string"}], [["OK"]]
+                return commands.ok_result()
             raise ValueError(f"table '{name}' already exists")
         src_name = m.group("src").strip("`")
         src = self.connector_tables.get(src_name)
@@ -1088,16 +1121,20 @@ class EngineSession:
     # -- conf-derived behaviors --------------------------------------
 
     def trigger_interval(self) -> str | None:
+        """``execution.checkpointing.interval`` as a Spark
+        processing-time trigger (None = unset or not a Flink duration;
+        callers fall back to their default trigger). '0' stays a
+        zero-interval trigger; a positive sub-ms interval rounds up to
+        1 ms."""
         iv = self.flink_conf.get("execution.checkpointing.interval")
-        if iv is None:
+        ms = None if iv is None else _flink_duration_ms(iv)
+        if ms is None:
             return None
-        m = re.match(r"(\d+)\s*(ms|s|sec|min)?", iv)
-        if not m:
-            return None
-        unit = {"ms": "milliseconds", "s": "seconds", "sec": "seconds", "min": "minutes"}.get(
-            m.group(2) or "ms", "milliseconds"
-        )
-        return f"{m.group(1)} {unit}"
+        ms = math.ceil(ms)
+        for unit, factor in (("minutes", 60_000), ("seconds", 1000)):
+            if ms and ms % factor == 0:
+                return f"{ms // factor} {unit}"
+        return f"{ms} milliseconds"
 
     def state_ttl_ms(self) -> int | None:
         """``table.exec.state.ttl`` as milliseconds (None = no TTL).
@@ -1109,33 +1146,11 @@ class EngineSession:
         raw = self.flink_conf.get("table.exec.state.ttl")
         if not raw:
             return None
-        # Flink TimeUtils label sets (singular/plural + short forms;
-        # note bare 'm' = MINUTES, not millis). Compound spellings like
-        # '1 h 30 min' sum; an unparseable token WARNS instead of
-        # silently disabling TTL (ADVICE r6 — silent None was exactly
-        # the unbounded-state failure TTL exists to prevent).
-        factors = {
-            **dict.fromkeys(["ns", "nano", "nanos", "nanosecond", "nanoseconds"], 1e-6),
-            **dict.fromkeys(["us", "µs", "micro", "micros", "microsecond", "microseconds"], 1e-3),
-            **dict.fromkeys(["ms", "milli", "millis", "millisecond", "milliseconds"], 1),
-            **dict.fromkeys(["s", "sec", "secs", "second", "seconds"], 1000),
-            **dict.fromkeys(["m", "min", "mins", "minute", "minutes"], 60_000),
-            **dict.fromkeys(["h", "hour", "hours"], 3_600_000),
-            **dict.fromkeys(["d", "day", "days"], 86_400_000),
-        }
-        total = 0.0
-        pos, ok = 0, True
-        for tok in re.finditer(r"(\d+)\s*([a-zA-Zµ]*)\s*", raw.strip()):
-            if tok.start() != pos:
-                ok = False
-                break
-            pos = tok.end()
-            unit = tok.group(2).lower() or "ms"
-            if unit not in factors:
-                ok = False
-                break
-            total += int(tok.group(1)) * factors[unit]
-        if not ok or pos != len(raw.strip()):
+        total = _flink_duration_ms(raw)
+        if total is None:
+            # warn instead of silently disabling TTL (ADVICE r6 —
+            # silent None was exactly the unbounded-state failure TTL
+            # exists to prevent)
             logger.warning(
                 "table.exec.state.ttl=%r is not a recognized Flink "
                 "duration — TTL DISABLED (state for idle keys will "

@@ -20,8 +20,6 @@ Scale notes (100 TB design intent, verified on the local plans):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -114,8 +112,8 @@ REVENUE_SQL = (
 #    key's row count is corpus-size-INVARIANT (an order has ≤ 7
 #    lines at any SF), so a single-level BIGINT sum sits ~8 orders
 #    of magnitude under 2^63 at any corpus size;
-#  - few-group aggregates whose sum grows with the corpus aggregate
-#    TWO-LEVEL — partial BIGINT sums per (keys,
+#  - a few-group aggregate whose sum grows with the corpus (q1)
+#    aggregates TWO-LEVEL — partial BIGINT sums per (keys,
 #    spark_partition_id()) (safe to ~8.8e9 rows per partition — 3
 #    orders of magnitude above a real task), merged exactly in
 #    DECIMAL(38,0) (a tiny second exchange of #groups×#partitions
@@ -135,13 +133,14 @@ REVENUE_SQL = (
 #    within noise (runs read −17%…+12%), kept because the hash-agg
 #    update becomes a long add instead of a BigDecimal allocation
 #    per row, which is what a 100 TB per-key aggregation needs.
-#  - q5/q6/q14: REVERTED to the r13 decimal forms — their filters
-#    leave too few rows at bench scale to amortize the two-level's
-#    extra exchange (+24-52% in pair runs), and single-level long
-#    would overflow at 100 TB (their group sums grow with the
-#    corpus). The isolated 50M-row A/B (1.49×) says the two-level
-#    form wins once the filtered row count is large; revisit only
-#    with a bench at that scale.
+#  - q5/q6/q14: the r13 single-level decimal forms — single-level
+#    long would overflow at 100 TB (their group sums grow with the
+#    corpus), and their filters leave too few rows to amortize the
+#    two-level's extra exchange: +24-52% in the sf0.1 pair runs, and
+#    with two-level forced on at sf1 and sf2 it won at most 5 of 10
+#    pairs per query (q5 flat, q6/q14 slower; CHANGES.md has the
+#    pairs). Its size gate engaged only past ~270M-3B lineitem rows, so
+#    the two-level form was deleted for these three.
 
 
 def _half_up_div(expr: str, pow10: int) -> str:
@@ -183,35 +182,6 @@ _ONE_PLUS_TAX = "CAST(1 AS DECIMAL(5,4)) + CAST(l_tax AS DECIMAL(5,4))"
 # revenue term as an unscaled (×10^4) BIGINT — same rounding, same
 # value as REVENUE_SQL / the r13 revenue_col
 REV_U4 = _half_up_div(_u4(_MONEY10) + " * " + _u4(_ONE_MINUS_DISC), 4)
-
-
-# Crossover for the q5/q6/q14 two-level unscaled-long forms (r15,
-# VERDICT r14 ask #5): their group sums grow with the corpus, so
-# single-level long would overflow at 100 TB, and below the crossover
-# the two-level's extra (tiny) exchange + second stage cost more than
-# the per-row BigDecimal they remove. Measured (r15 isolated paired
-# sweep, q6-shaped sum over localCheckpointed input on local[32]):
-# 1.19× SLOWER at 2M summed rows, 0.83× at 10M, 0.66× at 50M — the
-# crossover sits at ~5-8M rows actually entering the SUM. The r14
-# sf0.1 paired A/Bs (+24-52%, filtered counts 1.5k-20k rows) and the
-# r15 sf1 A/B (+9-23%, 0-1/7 wins, filtered counts 15k-200k) are the
-# same curve's left side. The switch is therefore INPUT-SIZE-adaptive
-# in SUMMED rows (guide §2 — derive from input size, not a constant):
-# each caller passes its measured filtered-rows fraction of lineitem
-# (sf-invariant — the filters are fixed date/rate windows), and the
-# two-level form engages once rows×fraction clears the crossover
-# with margin. Both forms are proven bit-identical on the fixtures
-# (test_decimal_width_equivalence pins them, forcing each side).
-TWO_LEVEL_MIN_SUMMED_ROWS = int(
-    os.environ.get("SPARK_GRAFT_TWOLEVEL_MIN_SUMMED", "8000000")
-)
-
-
-def _two_level(spark: SparkSession, sf_dir: str, fraction: float = 1.0) -> bool:
-    from flink_sql_toolkit_spark.tables import table_rows  # noqa: PLC0415
-
-    rows = table_rows(spark, sf_dir, "lineitem") * fraction
-    return rows >= TWO_LEVEL_MIN_SUMMED_ROWS
 
 
 def _money_merge(part: str, pow10: int, alias: str) -> Column:
@@ -329,30 +299,6 @@ def q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_discount") <= 0.07)
         & (F.col("l_quantity") < 24)
     )
-    # scale-adaptive aggregation form (see _two_level): q6's group sum
-    # grows with the corpus, so single-level LONG would overflow at
-    # 100 TB — past the crossover the per-row work goes unscaled-long
-    # with BIGINT partials per partition and an exact decimal merge
-    # across a 1-row-per-partition second exchange; below it the r13
-    # single-level decimal form stays. Fraction 0.03: q6's fixed
-    # date/discount/quantity window keeps 3.4% of lineitem (measured
-    # at sf0.1, sf-invariant); 0.03 deliberately rounds that down, so
-    # the form switches no earlier than the sum reaches the ~8M-row
-    # crossover (~270M lineitem rows).
-    if _two_level(spark, sf_dir, 0.03):
-        revdisc_u4 = _half_up_div(
-            _u4(_MONEY10) + " * " + _u4(f"CAST(l_discount AS {RATE_DEC})"), 4
-        )
-        partials = filtered.groupBy(
-            F.spark_partition_id().alias("_pid")
-        ).agg(
-            F.expr(f"SUM({revdisc_u4}) AS _r"),
-            F.expr("COUNT(1) AS _n"),
-        )
-        return partials.agg(
-            _money_merge("_r", 4, "revenue"),
-            F.expr("COALESCE(SUM(_n), 0) AS n_rows"),
-        )
     return filtered.agg(
         F.sum((dec("l_extendedprice") * dec("l_discount")).cast("decimal(18,4)"))
         .cast("double")
@@ -468,20 +414,6 @@ def q5_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
     )
-    # scale-adaptive aggregation form (see _two_level / the q6 note):
-    # q5's per-nation sum grows with the corpus — two-level
-    # unscaled-long past the crossover (BIGINT partials per
-    # (n_name, partition), exact decimal merge over a
-    # #nations×#partitions-row exchange), r13 single-level decimal
-    # below it. Fraction 0.0025: the ASIA-region star join keeps
-    # 0.25% of lineitem (measured at sf0.1, sf-invariant).
-    if _two_level(spark, sf_dir, 0.0025):
-        partials = joined.groupBy(
-            "n_name", F.spark_partition_id().alias("_pid")
-        ).agg(F.expr(f"SUM({REV_U4}) AS _r"))
-        return partials.groupBy("n_name").agg(
-            _money_merge("_r", 4, "revenue")
-        )
     return joined.groupBy("n_name").agg(
         F.sum(revenue_col()).cast("double").alias("revenue")
     )

@@ -13,7 +13,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
 # tmpfs is only safe for shuffle scratch when it is far larger than
@@ -23,9 +23,7 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS"
 # before /dev/shm is preferred (r15, VERDICT r14 ask #4 / ADVICE):
 # 8 GiB is ~2 orders of magnitude above the sf1 bench's total shuffle
 # volume while still rejecting every default container shm mount.
-SHM_MIN_FREE_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SHM_MIN_FREE", str(8 << 30))
-)
+SHM_MIN_FREE_BYTES = 8 << 30
 
 
 def _default_local_dir() -> str | None:

@@ -64,9 +64,7 @@ HOT_CACHE_BUDGET_BYTES = int(
 # 0.626 s) down to +2% on sim_topk. The r5 regression was ambient
 # host drift, not this policy — re-caching the small tables makes
 # the cluster strictly worse.
-HOT_CACHE_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_HOT_CACHE_MIN", str(8 << 20))
-)
+HOT_CACHE_MIN_BYTES = 8 << 20
 # Tables under the floor ARE cached, but at their NATURAL partitioning
 # (r14). The r6 floor A/B rejected small-table caching when the cached
 # copy carried a defaultParallelism repartition — 32 near-empty tasks
@@ -75,9 +73,7 @@ HOT_CACHE_MIN_BYTES = int(
 # collect from the block manager instead of running a cold one-task
 # parquet job (measured 100-500 ms per build per execution on the
 # relational queries — see OPTIMIZATION_r14.md), and repeated scans
-# skip parquet decode. Set SPARK_GRAFT_HOT_CACHE_SMALL=0 to restore
-# the r6-r13 behavior (small tables always re-scan parquet).
-CACHE_SMALL_TABLES = os.environ.get("SPARK_GRAFT_HOT_CACHE_SMALL", "1") != "0"
+# skip parquet decode.
 _CACHE_SPEND: "WeakKeyDictionary[SparkSession, int]" = WeakKeyDictionary()
 
 
@@ -256,11 +252,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if per_session is not None:
         spent = _CACHE_SPEND.get(spark, 0)
         size = _table_bytes(os.path.join(sf_dir, f"{name}.parquet"))
-        if (
-            HOT_CACHE_BUDGET_BYTES > 0
-            and (size >= HOT_CACHE_MIN_BYTES or CACHE_SMALL_TABLES)
-            and spent + size <= HOT_CACHE_BUDGET_BYTES
-        ):
+        if HOT_CACHE_BUDGET_BYTES > 0 and spent + size <= HOT_CACHE_BUDGET_BYTES:
             if size >= HOT_CACHE_MIN_BYTES:
                 # the fixtures are single-row-group files → a cold scan
                 # is one partition; spread the cached copy across every
@@ -283,7 +275,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                     df = df.repartition(parts)
             # Under the floor: persist at NATURAL partitioning — the
             # r6 loss was the 32-task scan shape, not the caching (see
-            # CACHE_SMALL_TABLES above).
+            # HOT_CACHE_MIN_BYTES above).
             df = df.persist()
             _CACHE_SPEND[spark] = spent + size
         per_session[key] = df

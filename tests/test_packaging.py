@@ -13,6 +13,7 @@ importlib.metadata serves it.
 
 from __future__ import annotations
 
+import re
 import tomllib
 from pathlib import Path
 
@@ -85,3 +86,19 @@ def test_installed_distribution_if_present():
         if e.name == "flink-sql-gateway-spark"
     ]
     assert eps and eps[0].value == "flink_sql_toolkit_spark.gateway:main"
+
+
+def test_env_knob_inventory():
+    """Engine tuning goes through SQL (``SET``), not process env vars:
+    the only ``SPARK_GRAFT_*`` knobs are the deployment settings and
+    the hot-cache budget the plan tools zero (README "Environment
+    knobs"). A new knob must be documented there and added here."""
+    knobs = set()
+    for path in [ROOT / "bench.py", *(ROOT / "flink_sql_toolkit_spark").rglob("*.py"),
+                 *(ROOT / "tools").rglob("*.py")]:
+        knobs |= set(re.findall(r"SPARK_GRAFT_[A-Z_]+", path.read_text()))
+    assert knobs == {
+        f"SPARK_GRAFT_{k}"
+        for k in ("BENCH_OUT", "CPUS", "DRIVER_MEM", "HOT_CACHE_BUDGET",
+                  "LOCAL_DIR", "SF_DIR")
+    }

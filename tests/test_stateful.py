@@ -912,6 +912,34 @@ def test_state_ttl_parsing_and_routed_smoke(spark, tmp_path):
         sess.close()
 
 
+
+def test_checkpoint_interval_parses_flink_durations(spark):
+    """`execution.checkpointing.interval` goes through the same Flink
+    duration parser as `table.exec.state.ttl`: bare 'm' is minutes and
+    hour/day units count ('5m' used to trigger every 5 ms, '1h' every
+    1 ms). Unset or unparseable → None (callers keep their default)."""
+    from flink_sql_toolkit_spark.engine import Engine
+
+    sess = Engine(spark).open_session("trigger")
+    try:
+        for raw, trigger in [
+            # spellings that already read right
+            ("10 s", "10 seconds"), ("2 min", "2 minutes"),
+            ("500 ms", "500 milliseconds"), ("30sec", "30 seconds"),
+            ("0", "0 milliseconds"),
+            # spellings that used to read as milliseconds
+            ("5m", "5 minutes"), ("1h", "60 minutes"),
+            ("1 hour", "60 minutes"), ("1 d", "1440 minutes"),
+            ("1 min 30 s", "90 seconds"), ("5 weeks", None),
+            ("bogus", None),
+        ]:
+            sess.flink_conf["execution.checkpointing.interval"] = raw
+            assert sess.trigger_interval() == trigger, raw
+        sess.flink_conf.pop("execution.checkpointing.interval")
+        assert sess.trigger_interval() is None
+    finally:
+        sess.close()
+
 def test_streaming_mr_all_rows_per_match_agrees_with_batch(spark, tmp_path):
     """ALL ROWS PER MATCH over a stream: one output row per matched
     input row with RUNNING measures and CLASSIFIER, emitted when the

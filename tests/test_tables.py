@@ -71,7 +71,6 @@ def test_hot_cache_small_tables_persist_at_natural_width(spark, monkeypatch):
     parquet job per query execution."""
     monkeypatch.setattr(tables, "HOT_CACHE_BUDGET_BYTES", 1 << 30)
     monkeypatch.setattr(tables, "HOT_CACHE_MIN_BYTES", 8 << 20)
-    monkeypatch.setattr(tables, "CACHE_SMALL_TABLES", True)
     tables._PLAN_CACHE.pop(spark, None)
     tables._CACHE_SPEND.pop(spark, None)
     spark.catalog.clearCache()
@@ -83,24 +82,6 @@ def test_hot_cache_small_tables_persist_at_natural_width(spark, monkeypatch):
     raw = spark.read.parquet(os.path.join(SF_DIR, "supplier.parquet"))
     assert tiny.count() == raw.count()
     tiny.unpersist()
-    tables._PLAN_CACHE.pop(spark, None)
-    tables._CACHE_SPEND.pop(spark, None)
-
-
-def test_hot_cache_small_tables_opt_out(spark, monkeypatch):
-    """SPARK_GRAFT_HOT_CACHE_SMALL=0 (CACHE_SMALL_TABLES=False)
-    restores the r6-r13 floor behavior: under-floor tables never
-    persist."""
-    monkeypatch.setattr(tables, "HOT_CACHE_BUDGET_BYTES", 1 << 30)
-    monkeypatch.setattr(tables, "HOT_CACHE_MIN_BYTES", 8 << 20)
-    monkeypatch.setattr(tables, "CACHE_SMALL_TABLES", False)
-    tables._PLAN_CACHE.pop(spark, None)
-    tables._CACHE_SPEND.pop(spark, None)
-    spark.catalog.clearCache()
-    tiny = load_table(spark, SF_DIR, "supplier")
-    assert tiny.storageLevel.useMemory is False
-    fanout = load_table(spark, SF_DIR, "documents")
-    assert fanout.storageLevel.useMemory is False
     tables._PLAN_CACHE.pop(spark, None)
     tables._CACHE_SPEND.pop(spark, None)
 
